@@ -197,333 +197,6 @@ def load_history(path: str = HISTORY_PATH) -> list[dict]:
         return [json.loads(line) for line in f if line.strip()]
 
 
-HEADLINE = [
-    "agg_daily_sales",
-    "agg_customer_summary",
-    "agg_product_perf",
-    "join_inner",
-    "join_self_groupcount",
-    "window_row_number_dedup",
-    "merge_upsert",
-    "window_tumbling_events",
-    "sessionize_events",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "text_quality",
-    "text_lang_id",
-    "similarity_topk",
-    "embedding_near_dup",
-    "window_running_sum",
-    "agg_cube",
-    "dq_metrics_single_pass",
-    "multimodal_features",
-    "tpch_q1_pricing",
-    "tpch_q3_topk",
-    "tpch_q5_region_revenue",
-    "tpch_q10_returned_topk",
-    "tpch_q9_product_profit",
-    "scd2_dimension_update",
-    "agg_exact_stats",
-    "resample_gap_fill",
-    "dedup_cluster_cc",
-    "corpus_clean_pipeline",
-    "dedup_incremental_lsh",
-    "dedup_span_exact",
-    "fuzzy_join_tables",
-    "training_order",
-    "funnel_conversion_steps",
-    "embedding_quantize_int8",
-    "text_bigram_lm_score",
-    "cohort_retention_weekly",
-    # round-5 additions: ANN machinery at full probe (exact), the biting
-    # bucket-cap path, and the pruned bigram-LM model
-    "similarity_ann_lsh_exact",
-    "similarity_ann_ivf_exact",
-    "dedup_lsh_bucket_capped",
-    "text_bigram_lm_pruned",
-    "funnel_strict_from_first",
-    "join_salted_skew",
-    "fuzzy_match_levenshtein",
-    "decontaminate_bloom_prefilter",
-    "snapshot_diff_orders",
-    "incremental_agg_orders",
-    # round-6 additions (VERDICT r5 item 7): the remaining plan-pinned r5
-    # families get bench rows from their first driver round, plus the new
-    # r6 operators — history tracks their cost from the start.
-    "topk_per_group",
-    "outlier_zscore_group",
-    "interval_overlap_orders",
-    "semantic_dedup",
-    "text_bm25_score",
-    "split_by_dedup_cluster",
-    "domain_mix_weights",
-    "collocation_pmi_topk",
-    "outlier_mad_group",
-    "approx_count_distinct_bounded",
-    "agg_approx_percentile_bounded",
-    # round-6 late additions: co-occurrence / sequence-mining family and
-    # the dedup-observability + keyword-extraction workloads.
-    "copurchase_part_pairs",
-    "event_transition_matrix",
-    "dedup_cluster_sizes",
-    "text_top_terms_per_doc",
-    # exact pairwise similarity, streaks, tail clipping, frequent-items
-    # sketch contract.
-    "text_doc_sim_cosine",
-    "gaps_islands_daily",
-    "winsorize_clip_group",
-    "heavy_hitters_bounded",
-    "pagerank_copurchase",
-    "dedup_jaccard_prefix",
-    "copurchase_item_cf",
-    "chisq_cells_flag_status",
-    "gini_quantity_by_flag",
-    "cumulative_unique_users",
-    "window_moving_median",
-    "conversion_latency_quantiles",
-    "linreg_price_on_quantity",
-    # round-7 additions: recall contracts for the production ANN paths
-    # (probe-limited index vs its own exact twin, bound hash-checked).
-    "similarity_ann_lsh_bounded",
-    "similarity_ann_ivf_bounded",
-    # round-7 operator additions: graph structure (triangles, RA link
-    # prediction), exact EWMA smoothing, hybrid-retrieval RRF fusion.
-    "triangle_count_copurchase",
-    "link_predict_copurchase_ra",
-    "window_ewma_smooth",
-    "search_hybrid_rrf",
-    "event_path_trigrams",
-    "ks_test_price_by_flag",
-    "hll_rollup_merge_bounded",
-    "graph_assortativity_copurchase",
-    "kcore_copurchase",
-    "sample_fixed_quota_per_group",
-    "ohlc_bars_daily",
-    "twap_event_value_daily",
-    "mannwhitney_u_price_by_flag",
-    "benford_digit_orders",
-    "attribution_last_touch",
-    "text_phrase_search",
-    "embedding_covariance",
-    "running_sum_clamped",
-    "allocate_largest_remainder",
-    "cuped_adjusted_spend",
-    "best_split_gini_quantity",
-    "survival_life_table",
-    "rolling_active_users",
-    "pareto_abc_parts",
-    "attribution_time_decay",
-    "window_trailing_range_sum",
-    "geo_radius_join",
-    "hierarchy_rollup_prefix",
-    "simpson_diversity_by_source",
-    "skyline_price_quantity",
-    "weighted_median_price_by_flag",
-    "rfm_segments",
-    "session_metrics_daily",
-    # round 8
-    "decile_lift_table",
-    "assoc_rules_copurchase",
-    "cusum_alerts_by_type",
-    "keyword_rake_topk",
-    "srm_check_by_priority",
-    "neyman_allocation_strata",
-    "session_funnel_depth",
-    "window_rolling_zscore",
-    "embedding_centroid_drift",
-    "window_cume_dist",
-    "agg_mode_per_group",
-    "histogram_equi_depth",
-    "rank_movers_monthly",
-    "audience_overlap_jaccard",
-    "distinctive_terms_by_source",
-    "bfs_levels_copurchase",
-    "percent_of_parent_rollup",
-    "dau_mau_stickiness",
-    "new_vs_returning_daily",
-    "sequence_violations_by_user",
-    "k_anonymity_audit",
-    "interpurchase_gap_quantiles",
-    "cohort_ltv_monthly",
-    "text_readability_flesch",
-    "funnel_step_rates",
-    "supplier_hhi_by_nation",
-    # round 9
-    "spearman_corr_price_quantity",
-    "anova_f_value_by_type",
-    "gini_concentration_revenue",
-    "outlier_iqr_group",
-    "acf_daily_revenue",
-    "dow_seasonality_index",
-    "market_basket_substitutes",
-    "fill_rate_sla_monthly",
-    "basket_size_revenue_bands",
-    "repeat_purchase_rate_monthly",
-    "customer_tier_migration",
-    "cart_abandonment_daily",
-    "text_hapax_ratio_by_source",
-    "token_coverage_topk",
-    "graph_degree_histogram",
-    "sessions_concurrent_peak_daily",
-    "doc_length_deciles_by_source",
-    "ab_test_proportions_ztest",
-    "churn_monthly_active",
-    "embedding_dim_range_by_label",
-    "lorenz_deciles_revenue",
-    "aov_trend_monthly",
-    "interarrival_burstiness",
-    "mix_drift_monthly_chi2",
-    "trailing_7d_purchase_rate",
-    "graph_clustering_coefficient",
-    "text_numeric_density_by_source",
-    "token_fertility_by_lang",
-    "dedup_cross_source_matrix",
-    "pack_efficiency_by_source",
-    "events_before_first_purchase",
-    "tenure_value_matrix",
-    "session_entry_exit_matrix",
-    # round-9 second wave: hypothesis-testing completion, time-series
-    # diagnostics, LLM-corpus novelty/growth, embedding ML primitives,
-    # retail economics.
-    "welch_ttest_price_by_flag",
-    "kruskal_wallis_value_by_type",
-    "cramers_v_flag_status",
-    "mann_kendall_trend_daily",
-    "crosscorr_revenue_volume",
-    "rsi_14d_daily",
-    "changepoint_mean_shift_daily",
-    "hellinger_drift_monthly",
-    "ngram_novelty_by_source",
-    "vocab_growth_deciles",
-    "kmeans_assign_recompute",
-    "embedding_norm_outliers",
-    "arc_elasticity_monthly_brand",
-    "demand_variability_xyz",
-    # round-9 third wave: temporal-relational + robust stats
-    "scd2_point_in_time_join",
-    "theil_sen_slope_daily",
-    "knn_geo_topk",
-    "seasonal_strength_dow",
-    # round-9 fourth wave: randomness/serial-correlation, drawdown,
-    # term burstiness
-    "runs_test_daily",
-    "max_drawdown_daily",
-    "durbin_watson_daily",
-    "term_burstiness_vmr",
-    # round-9 fifth wave: nearest as-of, intra-label sim histogram
-    "join_asof_nearest",
-    "embedding_sim_histogram_intra_label",
-    # round-9 sixth wave: ops-capacity + inventory planning
-    "hourly_load_profile",
-    "safety_stock_reorder_point",
-    "dwell_time_by_type",
-    # round 10: hypothesis-testing/effect-size completion, retail
-    # economics / reconciliation, diversity selection, ML features,
-    # interpolation, robust location, outage detection.
-    "kendall_tau_revenue_volume",
-    "brown_forsythe_variance_test",
-    "effect_size_cohens_d",
-    "mood_median_test",
-    "jackknife_loo_monthly",
-    "ridge_regression_price_quantity",
-    "unit_value_index_monthly_brand",
-    "promo_uplift_did",
-    "shift_share_nation_growth",
-    "reconcile_order_totals",
-    "growth_accounting_monthly",
-    "forecast_mase_naive",
-    "partition_skew_report",
-    "mmr_diverse_topk",
-    "systematic_sample_every_k",
-    "target_encode_loo_brand",
-    "kfold_assignment_balance",
-    "anonymization_ladder",
-    "resample_linear_interp_daily",
-    "trimmed_mean_price_by_flag",
-    "silence_record_alerts",
-    # round-10 waves 6-7 (registered after the r10 bench freeze; the
-    # scan_* fixture workloads stay excluded by convention)
-    "funnel_window_sensitivity",
-    "dedup_threshold_curve",
-    "rand_index_kmeans_labels",
-    "precision_recall_at_threshold",
-    "roc_auc_urgent_price",
-    # round 11: agreement/interval/paired statistics, financial/retail
-    # analytics, ETL audits, LLM-corpus curves (scan_jsonl fixture
-    # workload excluded by the same convention)
-    "cohens_kappa_status_priority",
-    "matthews_corrcoef_urgent_price",
-    "wilson_ci_status_by_priority",
-    "wilcoxon_signed_rank_yoy",
-    "friedman_test_daily_type",
-    "poisson_rate_ci_by_type",
-    "daily_return_stats",
-    "value_at_risk_daily",
-    "bollinger_band_breaks",
-    "abc_xyz_matrix",
-    "customer_concentration_topk",
-    "referential_integrity_audit",
-    "source_fingerprint_audit",
-    "out_of_order_arrival_stats",
-    "l_diversity_audit",
-    "token_budget_decile_curve",
-    "embedding_interlabel_centroid_dist",
-    "error_burst_stats",
-    "theil_u2_forecast",
-    "exact_quartiles_price_by_flag",
-    "part_adoption_monthly",
-    "ship_latency_quartiles_by_priority",
-    "discount_band_volume",
-    "order_size_histogram",
-    "cold_start_parts",
-    "unit_price_dispersion_by_brand",
-    "price_ending_profile",
-    "seasonal_dow_additive",
-    "abc_class_migration_halves",
-    "z_chart_monthly_revenue",
-    "session_duration_quartiles",
-    "customer_order_frequency_histogram",
-    "part_staleness_profile",
-    # round-12 (VERDICT r11 item 4): the HEADLINE inclusion rule is now
-    # explicit — see BENCH_EXEMPT below.  These 62 keys were registered
-    # across rounds 1-9 without bench rows despite carrying at least one
-    # Exchange in their physical plan; under the written rule they are
-    # HEADLINE.  Plan-derived (the classifying sweep is reproducible:
-    # any Exchange hash/range/SinglePartition node at sf0.001).
-    "agg_approx_percentile", "agg_argmax_per_group", "agg_count",
-    "agg_grouping_sets", "agg_histogram", "agg_percentile", "agg_rollup",
-    "approx_count_distinct", "array_explode_centroid",
-    "corpus_stats_report", "correlated_scalar_subquery",
-    "decontaminate_ngram_overlap", "dedup_keep_best", "dedup_simhash",
-    "distinct_keys", "join_asof", "join_asof_tolerance",
-    "join_full_outer", "join_left_flag", "join_null_safe", "join_range",
-    "json_extract_agg", "multimodal_frame_sample",
-    "multimodal_phash_dedup", "pack_sequences", "pivot_linestatus",
-    "profile_drift_orders", "profile_orders", "regexp_word_freq",
-    "sample_stratified", "select_token_budget", "setop_except",
-    "setop_except_all", "setop_intersect", "setop_intersect_all",
-    "sort_by", "string_agg_sorted", "text_tf_df_score",
-    "tpch_q2_min_cost_supplier", "tpch_q4_priority_exists",
-    "tpch_q6_forecast_revenue", "tpch_q7_volume_shipping",
-    "tpch_q8_market_share", "tpch_q11_important_stock",
-    "tpch_q12_priority_counts", "tpch_q13_custdist",
-    "tpch_q14_promo_share", "tpch_q15_top_supplier",
-    "tpch_q16_supplier_cnt", "tpch_q17_small_qty_revenue",
-    "tpch_q18_large_orders", "tpch_q19_disjunctive_revenue",
-    "tpch_q20_promotion_suppliers", "tpch_q21_waiting_supplier",
-    "tpch_q22_idle_customers", "window_cumulative_distinct",
-    "window_first_last", "window_lag_lead", "window_moving_avg",
-    "window_percent_rank", "window_rank_ntile", "window_sliding_events",
-    # round-12 additions (all shuffle-bearing → HEADLINE by the rule)
-    "surrogate_key_gap_islands", "linenumber_sequence_audit",
-    "duplicate_payment_screen", "p_chart_return_rate_monthly",
-    "month_end_closing_spike", "token_len_histogram",
-    "stopword_share_by_source", "token_simpson_diversity_by_source",
-    "embedding_active_dims_quartiles", "active_days_histogram",
-    "order_backlog_depth_daily", "langid_confusion_matrix",
-]
-
 # HEADLINE inclusion rule (VERDICT r11 item 4 — written down so bench
 # gaps can't accumulate silently again):
 #
@@ -542,12 +215,13 @@ HEADLINE = [
 #       limit shapes.  Their cost is the shared parquet scan, already
 #       priced by every benched key that reads the same table.
 #
-#   The partition below is EXPLICIT and total: every registry key is in
-#   HEADLINE or BENCH_EXEMPT, never neither, never both
-#   (tests/test_bench_guard.py::test_headline_exempt_partition_is_total).
-#   A new workload must be placed deliberately; putting a shuffle-
-#   bearing key into BENCH_EXEMPT requires editing this list, and the
-#   guard test re-derives the plan class to reject it.
+#   HEADLINE is derived, not listed: every registry key not in
+#   BENCH_EXEMPT, in registry order, so the partition is total by
+#   construction and a new workload is benched unless it is exempted
+#   here on purpose.  The guard test still rejects stale exempt keys
+#   (tests/test_bench_guard.py::test_headline_exempt_partition_is_total),
+#   and re-derives the plan class of every exempt key to reject a
+#   shuffle-bearing one.
 BENCH_EXEMPT = {
     # (a) fixture-parse scans (two carry a tiny count over the fixture,
     # still fixture-bound: scan_csv_malformed, scan_jsonl_corrupt_records)
@@ -564,6 +238,7 @@ BENCH_EXEMPT = {
     "text_repetition", "text_token_count", "topk_order_limit",
     "union_all", "unpivot_measures",
 }
+HEADLINE = [name for name in workloads.QUERIES if name not in BENCH_EXEMPT]
 
 
 def _loadavg() -> list[float]:

@@ -5,9 +5,9 @@ Reference: ``metadata.etl_audit_log`` + AuditLogger (audit_logger.py:25-285,
 Fixed here: non-destructive init (the reference drops the log on every
 AuditLogger construction — SURVEY.md §4.3), LongType row counts (§2.14#9),
 and query helpers built with the DataFrame API instead of f-string SQL
-(§2.14#4). Log writes are buffered per unit and appended once — an audit
-row per event would otherwise add a tiny file to the table per event
-(small-file problem at fleet scale).
+(§2.14#4). Every event is appended as soon as it is logged, one
+single-row append per event, so a unit that dies mid-run still leaves
+its STARTED row behind.
 """
 
 from __future__ import annotations
@@ -61,13 +61,11 @@ class AuditLogger:
         table_format: TableFormat,
         table: str = "metadata.etl_audit_log",
         run_id: str | None = None,
-        auto_flush: bool = True,
     ):
         self.spark = spark
         self.fmt = table_format
         self.table = table
         self.run_id = run_id or str(uuid.uuid4())
-        self.auto_flush = auto_flush
         self._buffer: list[tuple] = []
         self._starts: dict[str, float] = {}
         # Serializes buffer access + table appends: units may log from
@@ -101,8 +99,7 @@ class AuditLogger:
                     self._user,
                 )
             )
-            if self.auto_flush:
-                self.flush()
+            self.flush()
         return log_id
 
     def flush(self) -> None:

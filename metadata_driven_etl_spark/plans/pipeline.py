@@ -101,6 +101,14 @@ class _LayerBase:
             except Exception:
                 pass  # static confs can't change at runtime; defaults apply
 
+    def _sql(self, sql_query: str, run_date: str) -> DataFrame:
+        """Execute config SQL with the date bound as a Spark SQL named
+        parameter (never string-spliced)."""
+        q = sql_query.replace("'${PROCESSING_DATE}'", ":processing_date").replace(
+            "${PROCESSING_DATE}", ":processing_date"
+        )
+        return self.ctx.spark.sql(q, args={"processing_date": run_date})
+
     def _run_unit(self, unit, runner) -> UnitResult:
         uid = getattr(unit, "source_id", None) or getattr(
             unit, "transform_id", None
@@ -270,14 +278,6 @@ class SilverLayer(_LayerBase):
             self.config.transformations, lambda t: self._transform(t, run_date)
         )
 
-    def _sql(self, sql_query: str, run_date: str) -> DataFrame:
-        """Execute config SQL with the date bound as a Spark SQL named
-        parameter (never string-spliced)."""
-        q = sql_query.replace("'${PROCESSING_DATE}'", ":processing_date").replace(
-            "${PROCESSING_DATE}", ":processing_date"
-        )
-        return self.ctx.spark.sql(q, args={"processing_date": run_date})
-
     def _enrich(self, df: DataFrame, t: SilverTransform) -> DataFrame:
         """Apply declared enrichments in order (VERDICT r6 item 5: the
         as-of lookup was API-only; the engine's idiom is YAML). Runs
@@ -342,12 +342,6 @@ class GoldLayer(_LayerBase):
         return self._run_units(
             self.config.models, lambda m: self._model(m, run_date)
         )
-
-    def _sql(self, sql_query: str, run_date: str) -> DataFrame:
-        q = sql_query.replace("'${PROCESSING_DATE}'", ":processing_date").replace(
-            "${PROCESSING_DATE}", ":processing_date"
-        )
-        return self.ctx.spark.sql(q, args={"processing_date": run_date})
 
     def _event_frame(self, m: GoldModel) -> DataFrame:
         """``model_type: event`` — dispatch the declared clickstream

@@ -1,21 +1,39 @@
-"""Custom stateful streaming operator: applyInPandasWithState sessionization.
+"""Custom stateful streaming operators built on ``applyInPandasWithState``.
 
 The built-in ``F.session_window`` (streaming/windows.py) covers gap sessions
-declaratively; this module is the *custom* stateful path the engine offers
-when session semantics go beyond what the built-in expresses (per-session
-aggregates, custom close conditions, emit-on-close) — the pattern a user
-would extend for arbitrary per-key state machines at 100 TB stream scale.
+declaratively; this module is the *custom* stateful path for per-key state
+machines the built-ins cannot express. Each operator is the streaming twin of
+a batch statistic, and replaying a stream through it reproduces the batch
+result (pinned in tests/test_streaming.py).
 
-Semantics: per user, events extend an open session while the gap between
-consecutive events is ≤ ``gap_seconds``; a larger gap closes the session
-(emitted immediately) and opens a new one. An open session is closed and
-emitted when the event-time watermark passes its end + gap (event-time
-timeout) — so state is bounded by the watermark, never unbounded.
+Every twin folds its per-key rows under one of three ordering policies:
 
-Scale notes: state is one small tuple per open session per user — O(active
-users); the watermark timeout guarantees eviction. Shuffle is one hash
-partitioning on the user key. The same function body works for batch
-backfill via operators.windows.sessionize (property-tested equivalent).
+* **Watermark fold** — ``cusum_stateful``, ``rolling_zscore_stateful``,
+  ``drawdown_stateful`` and ``gap_record_stateful``. The statistic is
+  defined over event time and its fold is order-sensitive, so rows fold in
+  final (ts, id) order. A row at or before the event-time watermark when it
+  arrives is late and dropped (the late-data contract of every built-in
+  stateful op). Newer rows wait in a per-key PENDING buffer; once the
+  watermark passes them they are sorted and folded through exact integer
+  registers. An event-time timeout at the newest pending row flushes keys
+  whose batches stop. State per key is the registers plus the pending
+  buffer, bounded by the watermark horizon. ``_watermark_fold`` holds this
+  skeleton once; each twin supplies its input select and its fold step.
+* **Arrival order** — ``lateness_monitor_stateful`` folds rows in
+  micro-batch order, because the disorder IS its statistic.
+  ``sessionize_stateful`` also folds as rows arrive: its interval merge
+  absorbs disorder within the session gap, and the watermark only evicts
+  sessions that can no longer grow.
+* **Commutative** — ``active_days_monitor_stateful`` is a set union, so no
+  arrival order can change its answer.
+
+Every function shipped to executors is self-contained: it is built from
+nested defs and closure variables only and imports inside its body, so
+cloudpickle ships it by value and executors need not import this package.
+State schemas are scalar-typed (longs, doubles, JSON strings) for the Arrow
+round-trip; they are part of the checkpoint format and must not change.
+Each operator is one hash shuffle on its grouping key; its docstring bounds
+its per-key state.
 """
 
 from __future__ import annotations
@@ -43,12 +61,19 @@ def sessionize_stateful(
     user_col: str = "user_id",
     value_col: str = "value",
 ) -> DataFrame:
-    """events (streaming DF) → closed sessions, via per-user custom state."""
+    """events (streaming DF) → closed sessions, via per-user custom state.
+
+    Per user, events extend an open session while the gap between
+    consecutive events is ≤ ``gap_seconds``; a larger gap closes the
+    session (emitted immediately) and opens a new one. An open session is
+    closed and emitted when the event-time watermark passes its end + gap
+    (event-time timeout), so state is bounded by the watermark. State is
+    one small tuple per open session per user. The batch backfill form is
+    operators.windows.sessionize (property-tested equivalent).
+    """
 
     gap_us = gap_seconds * 1_000_000
 
-    # Self-contained closure (no module-level references): cloudpickle ships
-    # it by value so executors don't need this package importable.
     def track(key, pdfs, state):
         import datetime as _dt
 
@@ -133,6 +158,95 @@ def sessionize_stateful(
     )
 
 
+def _watermark_fold(
+    pre: DataFrame,
+    watermark: str,
+    init: tuple,
+    fold,
+    out_col: str,
+    output_schema: str,
+    state_schema: str,
+) -> DataFrame:
+    """The watermark-fold policy (module docstring), per event type.
+
+    ``pre`` has ``event_type``, ``ts`` and ``event_id`` followed by the
+    integer payload columns the fold reads. Pending rows are
+    ``[ts_us, event_id, *payload]``. ``init`` is the register tuple of a
+    new key; list registers are stored as JSON strings. ``fold(regs,
+    rows)`` takes rows in (ts, id) order and returns ``(regs, alerts)``,
+    each alert an ``(event_id, value)`` pair emitted as ``out_col``. The
+    state row is the registers followed by the pending buffer as JSON.
+    """
+
+    def track(key, pdfs, state):
+        import json
+
+        import pandas as pd
+
+        if state.exists:
+            *stored, pend_json = state.get
+            regs = [
+                json.loads(v) if isinstance(i, list) else int(v)
+                for i, v in zip(init, stored)
+            ]
+            pending = json.loads(pend_json)
+        else:
+            regs = [list(i) if isinstance(i, list) else i for i in init]
+            pending = []
+
+        if state.hasTimedOut:
+            # the watermark passed every pending row: finalize all
+            ready, pending = pending, []
+        else:
+            wm_ms = state.getCurrentWatermarkMs()
+            for pdf in pdfs:
+                unit_div = 1000 if pdf["ts"].dtype.str.endswith("[ns]") else 1
+                cols = ["event_id"] + [
+                    c for c in pdf.columns
+                    if c not in ("event_type", "ts", "event_id")
+                ]
+                for t_raw, *vals in zip(
+                    pdf["ts"].astype("int64").tolist(),
+                    *(pdf[c].tolist() for c in cols),
+                ):
+                    t_us = t_raw // unit_div
+                    if t_us // 1000 > wm_ms:  # else late: dropped
+                        pending.append([t_us, *(int(v) for v in vals)])
+            ready = [r for r in pending if r[0] // 1000 <= wm_ms]
+            pending = [r for r in pending if r[0] // 1000 > wm_ms]
+
+        regs, alerts = fold(regs, sorted(ready))
+        state.update(
+            (
+                *(json.dumps(r) if isinstance(r, list) else r for r in regs),
+                json.dumps(pending),
+            )
+        )
+        if pending:
+            # flush via timeout once the watermark passes the newest row
+            state.setTimeoutTimestamp(max(r[0] for r in pending) // 1000 + 1)
+        if alerts:
+            yield pd.DataFrame(
+                {
+                    "event_type": [key[0]] * len(alerts),
+                    "event_id": [a[0] for a in alerts],
+                    out_col: [a[1] for a in alerts],
+                }
+            )
+
+    return (
+        pre.withWatermark("ts", watermark)
+        .groupBy("event_type")
+        .applyInPandasWithState(
+            track,
+            output_schema,
+            state_schema,
+            "append",
+            GroupStateTimeout.EventTimeTimeout,
+        )
+    )
+
+
 CUSUM_OUTPUT_SCHEMA = "event_type string, event_id long, cusum_cents long"
 # fold carries the clamp-identity registers (exact bigints); the pending
 # buffer (rows newer than the watermark, not yet safe to fold) rides as a
@@ -156,19 +270,9 @@ def cusum_stateful(
     EXACT event-time semantics: S_t = max(0, S_{t-1} + (x_t − K)) folded
     strictly in (event time, id) order, alerts where S_t > H.
 
-    The CUSUM fold is order-sensitive, so unlike the sessionizer's
-    interval merge, correctness needs rows folded in final order: rows
-    newer than the watermark wait in a per-key PENDING buffer; once the
-    event-time watermark passes a row it is finalized — sorted into
-    (ts, id) order and folded through the clamp-identity registers
-    (psum, min-prefix), both exact bigints, emitting its alert if
-    S > H. Rows arriving later than the watermark are dropped (the
-    standard late-data contract of every built-in stateful op).
-
-    State per key: two longs + the pending buffer (bounded by the
-    watermark horizon); an event-time timeout at the newest pending row
-    flushes keys that stop receiving batches. Batch ≡ stream parity is
-    property-tested in tests/test_streaming.py.
+    Ordering follows the module's watermark-fold policy. The registers
+    are the clamp identity's running sum and min-prefix, both exact
+    bigints: S = psum − min(0, min prefix).
     """
     pre = events.select(
         F.col(type_col).alias("event_type"),
@@ -179,88 +283,23 @@ def cusum_stateful(
             - F.lit(k_cents).cast("long")
         ).alias("delta"),
     )
-
     h = int(h_cents)
 
-    def track(key, pdfs, state):
-        import json
+    def fold(regs, rows):
+        psum, minp = regs
+        alerts = []
+        for _t, eid, d in rows:
+            psum += d
+            if psum < minp:
+                minp = psum
+            s = psum - minp
+            if s > h:
+                alerts.append((eid, s))
+        return (psum, minp), alerts
 
-        import pandas as pd
-
-        def load():
-            if state.exists:
-                psum, minp, pend_json = state.get
-                return int(psum), int(minp), json.loads(pend_json)
-            return 0, 0, []
-
-        def emit(rows):
-            if not rows:
-                return None
-            return pd.DataFrame(
-                {
-                    "event_type": [key[0]] * len(rows),
-                    "event_id": [r[1] for r in rows],
-                    "cusum_cents": [r[2] for r in rows],
-                }
-            )
-
-        def finalize(psum, minp, ready):
-            # fold in final (ts, id) order; exact integer registers
-            alerts = []
-            for t_us, eid, d in sorted(ready):
-                psum += int(d)
-                if psum < minp:
-                    minp = psum
-                s = psum - minp
-                if s > h:
-                    alerts.append((t_us, eid, s))
-            return psum, minp, alerts
-
-        psum, minp, pending = load()
-
-        if state.hasTimedOut:
-            # the watermark passed every pending row: finalize all
-            psum, minp, alerts = finalize(psum, minp, pending)
-            state.update((psum, minp, json.dumps([])))
-            out = emit(alerts)
-            if out is not None:
-                yield out
-            return
-
-        wm_ms = state.getCurrentWatermarkMs()
-        for pdf in pdfs:
-            ts_ns = pdf["ts"].astype("int64")
-            unit_div = 1000 if pdf["ts"].dtype.str.endswith("[ns]") else 1
-            for t_raw, eid, d in zip(
-                ts_ns.tolist(),
-                pdf["event_id"].tolist(),
-                pdf["delta"].tolist(),
-            ):
-                t_us = int(t_raw) // unit_div
-                if t_us // 1000 <= wm_ms:
-                    continue  # late beyond the watermark: dropped
-                pending.append([t_us, int(eid), int(d)])
-        ready = [r for r in pending if r[0] // 1000 <= wm_ms]
-        pending = [r for r in pending if r[0] // 1000 > wm_ms]
-        psum, minp, alerts = finalize(psum, minp, ready)
-        state.update((psum, minp, json.dumps(pending)))
-        if pending:
-            # flush via timeout once the watermark passes the newest row
-            state.setTimeoutTimestamp(max(r[0] for r in pending) // 1000 + 1)
-        out = emit(alerts)
-        if out is not None:
-            yield out
-
-    return (
-        pre.withWatermark("ts", watermark)
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            track,
-            CUSUM_OUTPUT_SCHEMA,
-            CUSUM_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
+    return _watermark_fold(
+        pre, watermark, (0, 0), fold, "cusum_cents",
+        CUSUM_OUTPUT_SCHEMA, CUSUM_STATE_SCHEMA,
     )
 
 
@@ -293,16 +332,10 @@ def rolling_zscore_stateful(
 
     Parity: Python ints convert to float correctly-rounded (same as the
     JVM's long→double), and /, √ are correctly rounded in both — so the
-    emitted double is bit-identical to the batch window form
-    (stream ≡ batch pinned in tests/test_streaming.py).
+    emitted double is bit-identical to the batch window form.
 
-    Ordering discipline (the CUSUM twin's): rows newer than the
-    watermark wait in a per-key PENDING buffer; once the watermark
-    passes a row it is finalized in (ts, id) order through the window
-    registers. Late-beyond-watermark rows drop (the built-in stateful
-    ops' contract). State per key: two int64 moments + ≤win_rows window
-    values + the watermark-bounded pending buffer; an event-time
-    timeout flushes keys that stop receiving batches.
+    Ordering follows the module's watermark-fold policy. State per key:
+    two int64 moments + ≤win_rows window values + the pending buffer.
     """
     pre = events.select(
         F.col(type_col).alias("event_type"),
@@ -312,92 +345,30 @@ def rolling_zscore_stateful(
     )
     w, thresh = int(win_rows), int(z_thresh)
 
-    def track(key, pdfs, state):
-        import json
+    def fold(regs, rows):
         import math
 
-        import pandas as pd
+        s, s2, win = regs
+        alerts = []
+        for _t, eid, x in rows:
+            win.append(x)
+            s += x
+            s2 += x * x
+            if len(win) > w:
+                old = win.pop(0)
+                s -= old
+                s2 -= old * old
+            n = len(win)
+            var_num = n * s2 - s * s
+            if var_num > 0:
+                z = float(n * x - s) / math.sqrt(float(var_num))
+                if z > thresh or z < -thresh:
+                    alerts.append((eid, z))
+        return (s, s2, win), alerts
 
-        def load():
-            if state.exists:
-                s, s2, win_json, pend_json = state.get
-                return (
-                    int(s), int(s2),
-                    json.loads(win_json), json.loads(pend_json),
-                )
-            return 0, 0, [], []
-
-        def emit(rows):
-            if not rows:
-                return None
-            return pd.DataFrame(
-                {
-                    "event_type": [key[0]] * len(rows),
-                    "event_id": [r[0] for r in rows],
-                    "zscore": [r[1] for r in rows],
-                }
-            )
-
-        def finalize(s, s2, win, ready):
-            alerts = []
-            for t_us, eid, x in sorted(ready):
-                x = int(x)
-                win.append(x)
-                s += x
-                s2 += x * x
-                if len(win) > w:
-                    old = win.pop(0)
-                    s -= old
-                    s2 -= old * old
-                n = len(win)
-                var_num = n * s2 - s * s
-                if var_num > 0:
-                    z = float(n * x - s) / math.sqrt(float(var_num))
-                    if z > thresh or z < -thresh:
-                        alerts.append((eid, z))
-            return s, s2, win, alerts
-
-        s, s2, win, pending = load()
-
-        if state.hasTimedOut:
-            s, s2, win, alerts = finalize(s, s2, win, pending)
-            state.update((s, s2, json.dumps(win), json.dumps([])))
-            out = emit(alerts)
-            if out is not None:
-                yield out
-            return
-
-        wm_ms = state.getCurrentWatermarkMs()
-        for pdf in pdfs:
-            ts_ns = pdf["ts"].astype("int64")
-            unit_div = 1000 if pdf["ts"].dtype.str.endswith("[ns]") else 1
-            for t_raw, eid, x in zip(
-                ts_ns.tolist(), pdf["event_id"].tolist(), pdf["x"].tolist()
-            ):
-                t_us = int(t_raw) // unit_div
-                if t_us // 1000 <= wm_ms:
-                    continue  # late beyond the watermark: dropped
-                pending.append([t_us, int(eid), int(x)])
-        ready = [r for r in pending if r[0] // 1000 <= wm_ms]
-        pending = [r for r in pending if r[0] // 1000 > wm_ms]
-        s, s2, win, alerts = finalize(s, s2, win, ready)
-        state.update((s, s2, json.dumps(win), json.dumps(pending)))
-        if pending:
-            state.setTimeoutTimestamp(max(r[0] for r in pending) // 1000 + 1)
-        out = emit(alerts)
-        if out is not None:
-            yield out
-
-    return (
-        pre.withWatermark("ts", watermark)
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            track,
-            ZSCORE_OUTPUT_SCHEMA,
-            ZSCORE_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
+    return _watermark_fold(
+        pre, watermark, (0, 0, []), fold, "zscore",
+        ZSCORE_OUTPUT_SCHEMA, ZSCORE_STATE_SCHEMA,
     )
 
 
@@ -431,14 +402,8 @@ def drawdown_stateful(
     stream never draws down raw, exactly as an always-up equity curve
     never does; the CUSUM K-drift discipline).
 
-    Same order-sensitivity contract as the CUSUM twin: rows newer than
-    the watermark wait in a per-key pending buffer; the event-time
-    watermark finalizes them in (ts, id) order through the three
-    exact-bigint registers; rows later than the watermark are dropped.
-    State per key: three longs + the bounded pending buffer; the
-    event-time timeout at the newest pending row flushes keys whose
-    batches stop. Batch ≡ stream parity is property-tested in
-    tests/test_streaming.py.
+    Ordering follows the module's watermark-fold policy. State per key:
+    three exact-bigint registers + the pending buffer.
     """
     pre = events.select(
         F.col(type_col).alias("event_type"),
@@ -450,83 +415,22 @@ def drawdown_stateful(
         ).alias("cents"),
     )
 
-    def track(key, pdfs, state):
-        import json
+    def fold(regs, rows):
+        cum, peak, maxdd = regs
+        alerts = []
+        for _t, eid, cents in rows:
+            cum += cents
+            if cum > peak:
+                peak = cum
+            dd = peak - cum
+            if dd > maxdd:
+                maxdd = dd
+                alerts.append((eid, dd))
+        return (cum, peak, maxdd), alerts
 
-        import pandas as pd
-
-        def load():
-            if state.exists:
-                cum, peak, maxdd, pend_json = state.get
-                return int(cum), int(peak), int(maxdd), json.loads(pend_json)
-            return 0, 0, 0, []
-
-        def emit(rows):
-            if not rows:
-                return None
-            return pd.DataFrame(
-                {
-                    "event_type": [key[0]] * len(rows),
-                    "event_id": [r[1] for r in rows],
-                    "drawdown_cents": [r[2] for r in rows],
-                }
-            )
-
-        def finalize(cum, peak, maxdd, ready):
-            alerts = []
-            for t_us, eid, cents in sorted(ready):
-                cum += int(cents)
-                if cum > peak:
-                    peak = cum
-                dd = peak - cum
-                if dd > maxdd:
-                    maxdd = dd
-                    alerts.append((t_us, eid, dd))
-            return cum, peak, maxdd, alerts
-
-        cum, peak, maxdd, pending = load()
-
-        if state.hasTimedOut:
-            cum, peak, maxdd, alerts = finalize(cum, peak, maxdd, pending)
-            state.update((cum, peak, maxdd, json.dumps([])))
-            out = emit(alerts)
-            if out is not None:
-                yield out
-            return
-
-        wm_ms = state.getCurrentWatermarkMs()
-        for pdf in pdfs:
-            ts_ns = pdf["ts"].astype("int64")
-            unit_div = 1000 if pdf["ts"].dtype.str.endswith("[ns]") else 1
-            for t_raw, eid, cents in zip(
-                ts_ns.tolist(),
-                pdf["event_id"].tolist(),
-                pdf["cents"].tolist(),
-            ):
-                t_us = int(t_raw) // unit_div
-                if t_us // 1000 <= wm_ms:
-                    continue  # late beyond the watermark: dropped
-                pending.append([t_us, int(eid), int(cents)])
-        ready = [r for r in pending if r[0] // 1000 <= wm_ms]
-        pending = [r for r in pending if r[0] // 1000 > wm_ms]
-        cum, peak, maxdd, alerts = finalize(cum, peak, maxdd, ready)
-        state.update((cum, peak, maxdd, json.dumps(pending)))
-        if pending:
-            state.setTimeoutTimestamp(max(r[0] for r in pending) // 1000 + 1)
-        out = emit(alerts)
-        if out is not None:
-            yield out
-
-    return (
-        pre.withWatermark("ts", watermark)
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            track,
-            DRAWDOWN_OUTPUT_SCHEMA,
-            DRAWDOWN_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
+    return _watermark_fold(
+        pre, watermark, (0, 0, 0), fold, "drawdown_cents",
+        DRAWDOWN_OUTPUT_SCHEMA, DRAWDOWN_STATE_SCHEMA,
     )
 
 
@@ -551,13 +455,8 @@ def gap_record_stateful(
     detector ("we have never been this quiet") a fixed staleness
     threshold approximates badly.
 
-    Same order-sensitivity contract as the CUSUM/z-score/drawdown
-    twins: rows newer than the watermark wait in a per-key pending
-    buffer; the event-time watermark finalizes them in (ts, id) order
-    through the two exact-bigint registers; rows later than the
-    watermark are dropped. State per key: two longs + the bounded
-    pending buffer. Batch ≡ stream parity is property-tested in
-    tests/test_streaming.py.
+    Ordering follows the module's watermark-fold policy. State per key:
+    two exact-bigint registers (-1 = none yet) + the pending buffer.
     """
     pre = events.where(F.col(user_col).isNotNull()).select(
         F.col(type_col).alias("event_type"),
@@ -565,81 +464,24 @@ def gap_record_stateful(
         F.col(order_col).alias("event_id"),
     )
 
-    def track(key, pdfs, state):
-        import json
+    def fold(regs, rows):
+        last_us, max_gap = regs
+        alerts = []
+        for t_us, eid in rows:
+            if last_us >= 0:
+                gap = t_us - last_us
+                if gap > max_gap:
+                    alerts.append((eid, gap))
+                    max_gap = gap
+            last_us = t_us
+        return (last_us, max_gap), alerts
 
-        import pandas as pd
-
-        def load():
-            if state.exists:
-                last_us, max_gap, pend_json = state.get
-                return int(last_us), int(max_gap), json.loads(pend_json)
-            return -1, -1, []
-
-        def emit(rows):
-            if not rows:
-                return None
-            return pd.DataFrame(
-                {
-                    "event_type": [key[0]] * len(rows),
-                    "event_id": [r[1] for r in rows],
-                    "gap_us": [r[2] for r in rows],
-                }
-            )
-
-        def finalize(last_us, max_gap, ready):
-            alerts = []
-            for t_us, eid in sorted(ready):
-                if last_us >= 0:
-                    gap = t_us - last_us
-                    if gap > max_gap:
-                        alerts.append((t_us, eid, gap))
-                        max_gap = gap
-                last_us = t_us
-            return last_us, max_gap, alerts
-
-        last_us, max_gap, pending = load()
-
-        if state.hasTimedOut:
-            last_us, max_gap, alerts = finalize(last_us, max_gap, pending)
-            state.update((last_us, max_gap, json.dumps([])))
-            out = emit(alerts)
-            if out is not None:
-                yield out
-            return
-
-        wm_ms = state.getCurrentWatermarkMs()
-        for pdf in pdfs:
-            ts_ns = pdf["ts"].astype("int64")
-            unit_div = 1000 if pdf["ts"].dtype.str.endswith("[ns]") else 1
-            for t_raw, eid in zip(
-                ts_ns.tolist(), pdf["event_id"].tolist()
-            ):
-                t_us = int(t_raw) // unit_div
-                if t_us // 1000 <= wm_ms:
-                    continue  # late beyond the watermark: dropped
-                pending.append([t_us, int(eid)])
-        ready = [r for r in pending if r[0] // 1000 <= wm_ms]
-        pending = [r for r in pending if r[0] // 1000 > wm_ms]
-        last_us, max_gap, alerts = finalize(last_us, max_gap, ready)
-        state.update((last_us, max_gap, json.dumps(pending)))
-        if pending:
-            state.setTimeoutTimestamp(max(r[0] for r in pending) // 1000 + 1)
-        out = emit(alerts)
-        if out is not None:
-            yield out
-
-    return (
-        pre.withWatermark("ts", watermark)
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            track,
-            GAP_RECORD_OUTPUT_SCHEMA,
-            GAP_RECORD_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
+    return _watermark_fold(
+        pre, watermark, (-1, -1), fold, "gap_us",
+        GAP_RECORD_OUTPUT_SCHEMA, GAP_RECORD_STATE_SCHEMA,
     )
+
+
 
 
 LATENESS_OUTPUT_SCHEMA = (

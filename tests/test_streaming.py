@@ -1211,6 +1211,192 @@ def test_stateful_gap_record_matches_batch(spark, sf_dir, tmp_path_factory):
     assert got == want and len(want) > 0
 
 
+class _FakeGroupState:
+    """The GroupState surface the watermark-fold harness touches."""
+
+    def __init__(self, wm_ms: int = 0):
+        self.wm_ms = wm_ms
+        self.stored = None
+        self.hasTimedOut = False
+        self.timeout_ms = None
+
+    @property
+    def exists(self):
+        return self.stored is not None
+
+    @property
+    def get(self):
+        return self.stored
+
+    def getCurrentWatermarkMs(self):
+        return self.wm_ms
+
+    def update(self, value):
+        self.stored = value
+
+    def setTimeoutTimestamp(self, ms):
+        self.timeout_ms = ms
+
+
+class _CaptureFrame:
+    """Stands in for the events DataFrame: every transformation returns
+    itself, and the per-key function handed to applyInPandasWithState is
+    kept for the test to call directly."""
+
+    def select(self, *cols):
+        return self
+
+    def where(self, cond):
+        return self
+
+    def withWatermark(self, col, delay):
+        return self
+
+    def groupBy(self, *cols):
+        return self
+
+    def applyInPandasWithState(self, func, out_schema, state_schema, *args):
+        self.func, self.schemas = func, (out_schema, state_schema)
+        return self
+
+
+def _batch(rows, payload, unit="ns"):
+    """One micro-batch as the harness sees it: ``rows`` are
+    (ts_us, event_id, *payload) tuples."""
+    import pandas as pd
+
+    cols = list(zip(*rows)) if rows else [[] for _ in range(2 + len(payload))]
+    data = {
+        "event_type": ["k"] * len(rows),
+        "ts": pd.to_datetime(
+            pd.Series(cols[0], dtype="int64"), unit="us"
+        ).astype(f"datetime64[{unit}]"),
+        "event_id": pd.Series(cols[1], dtype="int64"),
+    }
+    for i, name in enumerate(payload):
+        data[name] = pd.Series(cols[2 + i], dtype="int64")
+    return pd.DataFrame(data)
+
+
+def _call(track, state, pdfs):
+    out = [
+        tuple(r)
+        for pdf in track(("k",), iter(pdfs), state)
+        for r in pdf.itertuples(index=False)
+    ]
+    assert all(r[0] == "k" for r in out)
+    return [r[1:] for r in out]
+
+
+def test_watermark_fold_harness_without_a_stream(spark):
+    """The shared watermark/pending-buffer skeleton of the four
+    event-time twins, driven per key with a fake GroupState and pandas
+    batches (no Spark stream): late rows drop, newer rows wait until the
+    watermark passes them, a timeout flushes the rest, and each twin's
+    fold over out-of-order batches equals a plain sorted fold."""
+    import json
+    import math
+    import random
+
+    from metadata_driven_etl_spark.streaming import stateful
+
+    def capture(twin, **kw):
+        frame = _CaptureFrame()
+        twin(frame, **kw)
+        assert frame.func.__qualname__ == "_watermark_fold.<locals>.track"
+        return frame
+
+    # -- late drop, pending release, timeout flush (every folded row alerts)
+    track = capture(stateful.cusum_stateful, h_cents=-1).func
+    state = _FakeGroupState(wm_ms=1_000)
+    rows = [(500_000, 1, 5), (1_000_000, 2, 5), (1_500_000, 3, 5), (3_000_000, 4, 5)]
+    assert _call(track, state, [_batch(rows, ["delta"])]) == []
+    psum, minp, pend = state.stored
+    assert (psum, minp) == (0, 0)
+    assert json.loads(pend) == [[1_500_000, 3, 5], [3_000_000, 4, 5]]
+    assert state.timeout_ms == 3_001
+    state.wm_ms = 2_000
+    assert _call(track, state, []) == [(3, 5)]
+    assert json.loads(state.stored[2]) == [[3_000_000, 4, 5]]
+    state.hasTimedOut = True
+    assert _call(track, state, []) == [(4, 10)]
+    assert state.stored == (10, 0, "[]")
+
+    # -- each fold step over out-of-order batches == a plain sorted fold
+    rng = random.Random(7)
+    t, events = 0, []
+    for eid in rng.sample(range(10_000), 300):
+        t += 0 if rng.random() < 0.1 else rng.randrange(60_000_000)
+        events.append((t, eid, rng.randrange(-9_000, 10_000)))
+    batch_of = [min(i // 50 + rng.randrange(2), 5) for i in range(len(events))]
+    batches = [[e for e, b in zip(events, batch_of) if b == n] for n in range(6)]
+    for b in batches:
+        rng.shuffle(b)
+    delay_ms = 3_600_000  # > the disorder between batches, < the ~2 h span
+    ordered = sorted(events)
+
+    def run(twin, payload, **kw):
+        frame = capture(twin, **kw)
+        state, out = _FakeGroupState(), []
+        for n, b in enumerate(batches):
+            rows = [(ts, eid, *([v] if payload else [])) for ts, eid, v in b]
+            unit = "us" if n % 2 else "ns"
+            out += _call(frame.func, state, [_batch(rows, payload, unit)])
+            newest_ms = max(r[0] for r in b) // 1000
+            state.wm_ms = max(state.wm_ms, newest_ms - delay_ms)
+        state.hasTimedOut = True
+        return frame.schemas, out + _call(frame.func, state, [])
+
+    h = 20_000
+    s, want = 0, []
+    for _t, eid, d in ordered:
+        s = max(0, s + d)
+        if s > h:
+            want.append((eid, s))
+    schemas, got = run(stateful.cusum_stateful, ["delta"], h_cents=h)
+    assert schemas == (stateful.CUSUM_OUTPUT_SCHEMA, stateful.CUSUM_STATE_SCHEMA)
+    assert got == want and want
+
+    w, zt = 20, 1
+    xs, want = [v for _t, _e, v in ordered], []
+    for i, (_t, eid, x) in enumerate(ordered):
+        win = xs[max(0, i - w + 1): i + 1]
+        n, s, s2 = len(win), sum(win), sum(v * v for v in win)
+        if n * s2 - s * s > 0:
+            z = float(n * x - s) / math.sqrt(float(n * s2 - s * s))
+            if abs(z) > zt:
+                want.append((eid, z))
+    schemas, got = run(
+        stateful.rolling_zscore_stateful, ["x"], win_rows=w, z_thresh=zt
+    )
+    assert schemas == (stateful.ZSCORE_OUTPUT_SCHEMA, stateful.ZSCORE_STATE_SCHEMA)
+    assert got == want and want
+
+    cum, peak, maxdd, want = 0, 0, 0, []
+    for _t, eid, c in ordered:
+        cum += c
+        peak = max(peak, cum)
+        if peak - cum > maxdd:
+            maxdd = peak - cum
+            want.append((eid, maxdd))
+    schemas, got = run(stateful.drawdown_stateful, ["cents"])
+    assert schemas == (
+        stateful.DRAWDOWN_OUTPUT_SCHEMA, stateful.DRAWDOWN_STATE_SCHEMA
+    )
+    assert got == want and want
+
+    prev_max, want = None, []
+    for (t0, _e0, _v0), (t1, eid, _v1) in zip(ordered, ordered[1:]):
+        if prev_max is None or t1 - t0 > prev_max:
+            want.append((eid, t1 - t0))
+            prev_max = t1 - t0
+    schemas, got = run(stateful.gap_record_stateful, [])
+    assert schemas == (
+        stateful.GAP_RECORD_OUTPUT_SCHEMA, stateful.GAP_RECORD_STATE_SCHEMA
+    )
+    assert got == want and want
+
+
 @pytest.mark.slow
 def test_stateful_lateness_monitor_matches_batch(
     spark, sf_dir, tmp_path_factory
