@@ -24,6 +24,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from metadata_driven_etl_spark.materialize import materialize
+
 
 def range_cluster(
     df: DataFrame, layout_cols: Sequence[str], num_files: int
@@ -331,7 +333,7 @@ class TableFormat:
             return
         target = self.read(spark, table)
         # Materialize before overwriting the files we read from.
-        merged = upsert(target, source, keys).localCheckpoint(eager=True)
+        merged = materialize(upsert(target, source, keys), eager=True)
         # Re-apply the table's existing partition spec: the rewrite path
         # would otherwise silently flatten a partitioned gold table on its
         # first incremental merge.

@@ -25,6 +25,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from metadata_driven_etl_spark.materialize import materialize
+
 DEFAULT_MAX_BASKET_SIZE = 1024
 
 
@@ -108,9 +110,9 @@ def _pair_counts_with_item_sizes(
     ``(item_a, item_b, n_baskets, _n_a, _n_b)`` — cosine/jaccard/etc.
     are one ``select`` each on top.
     """
-    baskets = _gather_baskets(
-        df, basket_col, item_col, max_basket_size
-    ).localCheckpoint(eager=False)
+    baskets = materialize(
+        _gather_baskets(df, basket_col, item_col, max_basket_size)
+    )
     pairs = (
         baskets.select(F.explode(pair_combinations(F.col("_items"))).alias("p"))
         .select("p.item_a", "p.item_b")
@@ -124,11 +126,11 @@ def _pair_counts_with_item_sizes(
     # explode + per-item count over the FULL basket frame executed once
     # per join side (verified in the r12 copurchase_item_cf plan). The
     # frame is |items| narrow rows.
-    items = (
+    # Lazy: eager measured slower in an A/B (copurchase_item_cf 4.0→4.9 s).
+    items = materialize(
         baskets.select(F.explode("_items").alias("_it"))
         .groupBy("_it")
         .agg(F.count(F.lit(1)).alias("_n"))
-        .localCheckpoint(eager=False)
     )
     ia = items.select(F.col("_it").alias("_it_a"), F.col("_n").alias("_n_a"))
     ib = items.select(F.col("_it").alias("_it_b"), F.col("_n").alias("_n_b"))
@@ -278,13 +280,12 @@ def transition_counts(
     |types|² rows, so the totals join is a broadcast of a tiny frame. The
     counts frame feeds two consumers (output rows + per-prev totals) and
     is materialized once (multi-consumer frames get no ReusedExchange;
-    lazy localCheckpoint — executes at first action, not construction).
+    lazy ``materialize`` — executes at first action, not construction).
     """
     trans = transition_pairs(df, key_col, type_col, ts_col, tiebreak)
-    counts = (
+    counts = materialize(
         trans.groupBy("prev_type", "next_type")
         .agg(F.count(F.lit(1)).alias("n_transitions"))
-        .localCheckpoint(eager=False)
     )
     totals = counts.groupBy(F.col("prev_type").alias("_tot_prev")).agg(
         F.sum("n_transitions").alias("_prev_total")
@@ -387,9 +388,9 @@ def assoc_rules(
     frame never re-shuffles, and there is never a fact self-join.
     """
     d38 = "decimal(38,0)"
-    baskets = _gather_baskets(
-        df, basket_col, item_col, max_basket_size
-    ).localCheckpoint(eager=False)
+    baskets = materialize(
+        _gather_baskets(df, basket_col, item_col, max_basket_size)
+    )
     pairs = (
         baskets.select(F.explode(pair_combinations(F.col("_items"))).alias("p"))
         .select("p.item_a", "p.item_b")
@@ -410,11 +411,11 @@ def assoc_rules(
     )
     # Materialized once — ia/ib rename-only consumers, same rationale
     # (and r12 plan evidence) as _pair_counts_with_item_sizes.
-    items = (
+    # Lazy: eager measured slower in an A/B (assoc_rules_copurchase 3.6→4.2 s).
+    items = materialize(
         baskets.select(F.explode("_items").alias("_it"))
         .groupBy("_it")
         .agg(F.count(F.lit(1)).alias("_n"))
-        .localCheckpoint(eager=False)
     )
     ia = items.select(F.col("_it").alias("_ant"), F.col("_n").alias("_n_a"))
     ib = items.select(F.col("_it").alias("_con"), F.col("_n").alias("_n_b"))
@@ -553,16 +554,15 @@ def substitute_pairs(
     m-row frames everywhere — the fact never self-joins.
     """
     d38 = "decimal(38,0)"
-    baskets = _gather_baskets(
-        df, basket_col, item_col, max_basket_size
-    ).localCheckpoint(eager=False)
+    baskets = materialize(
+        _gather_baskets(df, basket_col, item_col, max_basket_size)
+    )
     items = baskets.select(
         F.explode("_items").alias("it")
     ).groupBy("it").agg(F.count(F.lit(1)).alias("n"))
-    top = (
+    top = materialize(
         items.orderBy(F.desc("n"), F.asc("it"))
         .limit(top_m)
-        .localCheckpoint(eager=False)
     )
     a = top.select(F.col("it").alias("item_a"), F.col("n").alias("n_a"))
     b = top.select(F.col("it").alias("item_b"), F.col("n").alias("n_b"))

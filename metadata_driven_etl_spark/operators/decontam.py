@@ -24,11 +24,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from metadata_driven_etl_spark.operators.dedup import (
-    _materialize,
-    shingles,
-    sql_shingles,
-)
+from metadata_driven_etl_spark.materialize import materialize
+from metadata_driven_etl_spark.operators.dedup import shingles, sql_shingles
 
 
 def ngram_overlap(
@@ -124,7 +121,6 @@ def ngram_overlap_bloom(
     n: int = 5,
     num_bits: int = 1 << 17,
     num_hashes: int = 5,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """:func:`ngram_overlap` with a Bloom-filter prefilter — IDENTICAL
     output (the filter only admits false positives; an exact confirm join
@@ -159,7 +155,6 @@ def ngram_overlap_bloom(
     matched = (
         _bloom_matched_grams(
             train, eval_df, text_col, id_col, n, num_bits, num_hashes,
-            checkpoint_dir,
         )
         .groupBy(id_col)
         .agg(F.count(F.lit(1)).alias("n_matched_grams"))
@@ -175,7 +170,6 @@ def contaminated_ids_bloom(
     n: int = 5,
     num_bits: int = 1 << 17,
     num_hashes: int = 5,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Filter-pipeline form of :func:`ngram_overlap_bloom`: just the ids
     of contaminated training docs, identical to
@@ -184,7 +178,6 @@ def contaminated_ids_bloom(
     return (
         _bloom_matched_grams(
             train, eval_df, text_col, id_col, n, num_bits, num_hashes,
-            checkpoint_dir,
         )
         .select(id_col)
         .distinct()
@@ -199,15 +192,13 @@ def _bloom_matched_grams(
     n: int,
     num_bits: int,
     num_hashes: int,
-    checkpoint_dir: str | None,
 ) -> DataFrame:
     """(id_col, gram) rows of TRUE eval-set matches: Bloom prefilter on
     the corpus side, exact confirm join behind it. The per-doc-distinct
     shingles contract carries through, so a downstream count is a
     distinct-matched-gram count."""
-    eval_grams = _materialize(
+    eval_grams = materialize(
         eval_df.select(F.explode(shingles(text_col, n)).alias("gram")).distinct(),
-        checkpoint_dir,
     )  # consumed twice: bitmap build + exact confirm join
 
     # --- build: positions → packed words → one-row dense-array bitmap ---

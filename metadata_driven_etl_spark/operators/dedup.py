@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from metadata_driven_etl_spark.materialize import materialize
 from metadata_driven_etl_spark.operators.text import (
     norm_text,
     sql_norm_text,
@@ -137,7 +138,7 @@ def _iteration_regime(
     """Scope the small-graph confs over an iterative loop's PLANNING.
 
     Yields the loop's shuffle-partition count when the small regime is
-    on, else ``None``. Lazy ``localCheckpoint`` compiles the physical
+    on, else ``None``. A lazy ``materialize`` compiles the physical
     plan at CALL time (``df.rdd`` materializes the plan immediately,
     deferring only execution), so every round planned inside this scope
     bakes the small partitioning in even though the jobs may run later;
@@ -162,45 +163,6 @@ def _iteration_regime(
     finally:
         for k, v in old.items():
             spark.conf.set(k, v)
-
-
-def _materialize(df: DataFrame, checkpoint_dir: str | None) -> DataFrame:
-    """Truncate lineage and cache a frame consumed by multiple subtrees.
-
-    ``None`` (local default) uses ``localCheckpoint`` — blocks live in
-    executor storage, lost with an executor. On a real cluster pass a
-    durable path (HDFS/S3): set as the context's checkpoint dir, each
-    materialization then survives executor loss.
-
-    NOTE (ADVICE r5): the durable path runs persist + EAGER checkpoint —
-    Spark jobs execute at DataFrame-CONSTRUCTION time (Spark's documented
-    persist-before-reliable-checkpoint guidance; a lazy checkpoint would
-    execute the lineage twice). Builders composed with ``checkpoint_dir``
-    set are therefore no longer lazy: composing e.g.
-    ``lsh_candidate_pairs`` into a plan that is conditionally discarded
-    pays full materialization up front. Compose lazily with the local
-    default; pass ``checkpoint_dir`` only when the plan WILL run. Same seam
-    ``connected_components`` exposes.
-    """
-    if checkpoint_dir is not None:
-        sc = df.sparkSession.sparkContext
-        if not sc.getCheckpointDir():
-            sc.setCheckpointDir(checkpoint_dir)
-        # Unlike localCheckpoint, a reliable checkpoint does NOT cache
-        # blocks — without persist() the checkpoint write would recompute
-        # the lineage (Spark's documented recommendation is to persist
-        # before a reliable checkpoint). The cache is only needed WHILE
-        # the checkpoint files are being written, so: persist → eager
-        # checkpoint → unpersist. Leaving it persisted would leak one
-        # CacheManager entry per materialization (one per convergence
-        # block inside connected_components' loop) for the session
-        # lifetime; after unpersist every consumer reads the durable
-        # checkpoint files, which is the point of this path.
-        cached = df.persist()
-        out = cached.checkpoint(eager=True)
-        cached.unpersist()
-        return out
-    return df.localCheckpoint(eager=False)
 
 
 def minhash_signature(
@@ -318,7 +280,6 @@ def lsh_candidate_pairs(
     band_size: int = 2,
     shingle_n: int = 3,
     tokens_col: str | None = None,
-    checkpoint_dir: str | None = None,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
 ) -> DataFrame:
     """Candidate near-dup pairs (id_a < id_b) sharing ≥1 LSH band bucket.
@@ -347,12 +308,11 @@ def lsh_candidate_pairs(
     exact-candidate baseline, and capped output is always a SUBSET of
     uncapped output (pinned by tests/test_operators_props.py).
     """
-    bands = _materialize(
+    bands = materialize(
         lsh_bands(
             df, text_col, id_col, num_hashes, band_size, shingle_n,
             tokens_col=tokens_col,
         ),
-        checkpoint_dir,
     )
     if max_bucket_size is not None:
         # one extra agg on the (already materialized) hash-sized band
@@ -366,11 +326,10 @@ def lsh_candidate_pairs(
             .filter(F.col("_n") > max_bucket_size)
             .select("band", "bhash")
         )
-        bands = _materialize(
+        bands = materialize(
             bands.join(
                 F.broadcast(oversized), ["band", "bhash"], "left_anti"
             ),
-            checkpoint_dir,
         )
     a = bands.alias("a")
     b = bands.alias("b")
@@ -454,7 +413,6 @@ def incremental_dedup_survivors(
     num_hashes: int = 8,
     band_size: int = 2,
     shingle_n: int = 3,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Batch documents that survive near-dup screening against a PERSISTED
     corpus band index and against earlier docs in the same batch.
@@ -470,8 +428,8 @@ def incremental_dedup_survivors(
     """
     # bb is consumed THREE times (corpus screen + both self-join sides);
     # materialize the hash-sized band frame once so the batch is minhashed
-    # once, not three times (see _materialize for the durable-dir seam)
-    bb = _materialize(
+    # once, not three times
+    bb = materialize(
         lsh_bands(
             batch.select(id_col, text_col),
             text_col,
@@ -480,7 +438,6 @@ def incremental_dedup_survivors(
             band_size,
             shingle_n,
         ),
-        checkpoint_dir,
     )
     ib = index_bands.select(
         F.col("band").alias("i_band"), F.col("bhash").alias("i_bhash")
@@ -552,7 +509,6 @@ def ngram_jaccard_pairs(
     threshold: float = 0.25,
     num_hashes: int = 8,
     band_size: int = 2,
-    checkpoint_dir: str | None = None,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
 ) -> DataFrame:
     """Exact Jaccard over shingle sets, verified only for LSH candidates.
@@ -565,16 +521,14 @@ def ngram_jaccard_pairs(
     """
     cands = lsh_candidate_pairs(
         df, text_col, id_col, num_hashes=num_hashes, band_size=band_size,
-        shingle_n=shingle_n, checkpoint_dir=checkpoint_dir,
-        max_bucket_size=max_bucket_size,
+        shingle_n=shingle_n, max_bucket_size=max_bucket_size,
     )
     # materialized once: consumed by BOTH verification join sides, and
     # re-shingling the corpus per side would double the dominant cost
-    sets_ = _materialize(
+    sets_ = materialize(
         df.select(
             F.col(id_col), shingles(text_col, shingle_n).alias("shset")
         ),
-        checkpoint_dir,
     )
     # NOTE (r12): the broadcast verify is CORRECT here — LSH proposes a
     # sparse candidate set (tens to hundreds of pairs), so the verify
@@ -731,7 +685,6 @@ def connected_components(
     a_col: str = "id_a",
     b_col: str = "id_b",
     max_iter: int = 25,
-    checkpoint_dir: str | None = None,
     check_every: int = 2,
 ) -> DataFrame:
     """Cluster ids for the near-dup graph: (id, cluster_id = min reachable id).
@@ -762,11 +715,9 @@ def connected_components(
     exactly when each component carries one label — cluster_id = min
     reachable id, as before.
 
-    ``checkpoint_dir``: where to truncate lineage. ``None`` (local-mode
-    default) uses ``localCheckpoint`` — blocks live in executor memory, so
-    an executor loss mid-iteration kills the job. On a real cluster pass a
-    durable path (HDFS/S3): it is set as the context's checkpoint dir and
-    each round uses reliable ``checkpoint()``, surviving executor loss.
+    Each round truncates lineage through
+    :func:`~metadata_driven_etl_spark.materialize.materialize`, so the
+    rounds are durable when the session has a checkpoint dir.
 
     Small-graph regime: below ``SMALL_GRAPH_EDGE_ROWS`` directed edges the
     loop plans with AQE off, edge-count-sized shuffle partitions, and the
@@ -786,15 +737,13 @@ def connected_components(
     regardless (the class-edge count IS the convergence signal). Pinned by
     ``tests/test_operators_props.py::test_cc_max_iter_exhaustion_partial_labels``.
     """
-    _truncate = lambda df: _materialize(df, checkpoint_dir)  # noqa: E731
-
     # Symmetrize via ONE explode pass, not a union of two selects: Spark
     # shares no plan subtrees across union branches, so the union form
     # executed the whole (potentially expensive) pair-generation subtree
     # twice — measured r12 on semantic_dedup: the edge materialization
     # cost ~2× the pair join alone. The exploded [(a,b), (b,a)] per pair
     # row is the same directed-edge multiset in a single pass.
-    edges = _truncate(
+    edges = materialize(
         pairs.select(
             F.explode(
                 F.array(
@@ -831,7 +780,7 @@ def connected_components(
             # partitions: every per-round BHJ probe then schedules
             # small_parts tasks instead of defaultParallelism ones.
             edges = edges.coalesce(small_parts)
-        labels = _truncate(
+        labels = materialize(
             edges.groupBy("src")
             .agg(F.min("dst").alias("_nbr"))
             .select(
@@ -855,7 +804,7 @@ def connected_components(
         lab_d = labels.select(
             F.col("node").alias("_nd"), F.col("cluster_id").alias("_cd")
         )
-        cedges = _truncate(
+        cedges = materialize(
             edges.join(_bcast(lab_s), edges["src"] == F.col("_ns"))
             .join(_bcast(lab_d), edges["dst"] == F.col("_nd"))
             .filter(F.col("_cs") != F.col("_cd"))
@@ -869,7 +818,7 @@ def connected_components(
             if cedges.count() == 0:
                 break
             # Borůvka hook: class → min(self, min adjacent class).
-            rmap = _truncate(
+            rmap = materialize(
                 cedges.groupBy("_cs")
                 .agg(F.min("_cd").alias("_mn"))
                 .select(
@@ -896,7 +845,7 @@ def connected_components(
                         (F.col("_t2") < F.col("_t")).alias("_moved"),
                     )
                 )
-                composed = _truncate(composed)
+                composed = materialize(composed)
                 moved = composed.filter(F.col("_moved")).count()
                 rmap = composed.select("_c", "_t")
                 if moved == 0:
@@ -905,7 +854,7 @@ def connected_components(
             # map. Classes with no smaller neighbor map to themselves;
             # left join + coalesce keeps classes absent from rmap (none,
             # given symmetric edges — defensive only).
-            labels = _truncate(
+            labels = materialize(
                 labels.join(
                     _bcast(rmap), labels["cluster_id"] == rmap["_c"], "left"
                 ).select(
@@ -921,7 +870,7 @@ def connected_components(
             rmap_d = rmap.select(
                 F.col("_c").alias("_cb"), F.col("_t").alias("_tb")
             )
-            cedges = _truncate(
+            cedges = materialize(
                 cedges.join(_bcast(rmap_s), cedges["_cs"] == F.col("_ca"))
                 .join(_bcast(rmap_d), cedges["_cd"] == F.col("_cb"))
                 .filter(F.col("_ta") != F.col("_tb"))
@@ -947,7 +896,6 @@ def keep_best_per_cluster(
     id_col: str = "doc_id",
     cluster_col: str = "cluster_id",
     score_col: str = "kept_score",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Canonical-document selection: per near-dup cluster keep the single
     highest-scoring member (ties broken by lowest id — fully deterministic).
@@ -976,19 +924,15 @@ def keep_best_per_cluster(
     once per branch (measured r12: the final plan held two copies of the
     whole subtree). The materialized frame is 4 narrow columns per
     document — linear, far cheaper than re-running the join tree at any
-    scale. ``checkpoint_dir=None`` (local default) uses localCheckpoint;
-    pass a durable path on a real cluster (same seam as
-    ``connected_components``).
+    scale.
 
-    ``checkpoint_dir`` semantics (ADVICE r12): BOTH settings run the
-    materialization Spark job eagerly at DataFrame-CONSTRUCTION time —
-    the local default with ``localCheckpoint(eager=True)`` (blocks in
-    executor memory, non-durable; measured r12: the lazy form let the
-    two union branches race and compute the upstream twice), the durable
-    path with persist → reliable ``checkpoint()``. Composing this
-    operator into a plan that might be discarded pays the full upstream
-    materialization up front; callers that only want to COMPOSE plans
-    lazily should stack the window/filter primitives directly instead.
+    The materialization is eager (``materialize(joined, eager=True)``):
+    the Spark job runs at DataFrame-CONSTRUCTION time (measured r12: the
+    lazy form let the two union branches race and compute the upstream
+    twice). Composing this operator into a plan that might be discarded
+    pays the full upstream materialization up front; callers that only
+    want to COMPOSE plans lazily should stack the window/filter
+    primitives directly instead.
     """
     from metadata_driven_etl_spark.operators.windows import topk_per_group
 
@@ -996,17 +940,13 @@ def keep_best_per_cluster(
         F.count(F.lit(1)).alias("n_members")
     )
     joined = clusters.join(scored, id_col).join(members, cluster_col)
-    # EAGER on the local path: the two union branches below execute as
-    # concurrent stages of ONE job, and a lazy localCheckpoint would let
-    # both compute the RDD simultaneously (no reuse — measured r12: the
-    # lazy form was ~13% slower than no checkpoint at all, paying
-    # persistence cost without deduplication). Eager runs one job up
-    # front; both branches then read the persisted blocks.
-    joined = (
-        _materialize(joined, checkpoint_dir)
-        if checkpoint_dir is not None
-        else joined.localCheckpoint(eager=True)
-    )
+    # EAGER: the two union branches below execute as concurrent stages of
+    # ONE job, and a lazy materialization would let both compute the RDD
+    # simultaneously (no reuse — measured r12: the lazy form was ~13%
+    # slower than no checkpoint at all, paying persistence cost without
+    # deduplication). Eager runs one job up front; both branches then
+    # read the persisted blocks.
+    joined = materialize(joined, eager=True)
     singles = joined.filter(F.col("n_members") == 1).select(
         cluster_col,
         F.col(id_col).alias(f"kept_{id_col}"),
@@ -1271,7 +1211,6 @@ def fuzzy_join(
     num_hashes: int = 8,
     band_size: int = 2,
     shingle_n: int = 3,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Approximate string join between TWO tables: pairs whose shingle-set
     Jaccard ≥ ``threshold``, found via shared-LSH-band blocking (never the
@@ -1292,19 +1231,17 @@ def fuzzy_join(
     # shingle each side ONCE: the materialized sets feed both the band
     # construction and the verification join (tokenize+shingle is the
     # dominant per-row cost; bands/minhash derive from the same arrays)
-    ls = _materialize(
+    ls = materialize(
         left.select(
             F.col(id_col).alias("left_id"),
             shingles(text_col, shingle_n).alias("set_l"),
         ),
-        checkpoint_dir,
     )
-    rs = _materialize(
+    rs = materialize(
         right.select(
             F.col(id_col).alias("right_id"),
             shingles(text_col, shingle_n).alias("set_r"),
         ),
-        checkpoint_dir,
     )
     lb = lsh_bands(
         ls, id_col="left_id", num_hashes=num_hashes, band_size=band_size,
@@ -1385,7 +1322,6 @@ def jaccard_prefix_pairs(
     id_col: str = "doc_id",
     shingle_n: int = 3,
     threshold: float = 0.25,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """EXACT set-similarity self-join: ALL pairs with shingle-set Jaccard
     >= ``threshold`` — no LSH recall loss (the prefix filter generates a
@@ -1429,12 +1365,11 @@ def jaccard_prefix_pairs(
     # exact candidate-bound threshold: t' = (num-1)/1e6 (see docstring)
     t_num = round(threshold * 1_000_000) - 1
     t_den = 1_000_000
-    sets_ = _materialize(
+    sets_ = materialize(
         df.select(
             F.col(id_col).alias("_pid"),
             shingles(text_col, shingle_n).alias("shset"),
         ).filter(F.size("shset") > 0),
-        checkpoint_dir,
     )
     tok = sets_.select("_pid", F.size("shset").alias("_sz"),
                        F.explode("shset").alias("_tok"))
@@ -1460,7 +1395,7 @@ def jaccard_prefix_pairs(
     alpha = F.expr(
         f"({t_num} * CAST(_sz AS BIGINT) + {t_den - 1}) div {t_den}"
     )
-    prefix = _materialize(
+    prefix = materialize(
         ordered.select(
             "_pid",
             "_sz",
@@ -1472,7 +1407,6 @@ def jaccard_prefix_pairs(
                 )
             ).alias("_p"),
         ).select("_pid", "_sz", F.col("_p._tok").alias("_tok")),
-        checkpoint_dir,
     )
     pa = prefix.select(
         F.col("_pid").alias("id_a"), F.col("_sz").alias("_sz_a"),
@@ -1587,7 +1521,7 @@ def dup_flow_matrix(
         .filter(F.col("tot") > 1)
         .select(fp_col)
     )
-    k = c.join(dup, fp_col).localCheckpoint(eager=False)
+    k = materialize(c.join(dup, fp_col))
     a = k.select(
         fp_col, F.col(container_col).alias(out_a), F.col("n").alias("na")
     )

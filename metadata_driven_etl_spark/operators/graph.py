@@ -24,8 +24,8 @@ Scale design (100 TB):
   partitioning) + one partial-aggregated sum on dst. No |V|×|V| anything.
 - The edge list (with out-degrees pre-joined) is materialized ONCE and
   reused every round; rank frames are materialized per round to truncate
-  lineage (localCheckpoint locally, durable ``checkpoint_dir`` on a
-  cluster — the connected_components seam).
+  lineage (``materialize``: durable when the session has a checkpoint
+  dir).
 - Overflow headroom: each node's new rank is ≤ base + num·(in-mass)/den
   where total mass stays ≈ |V|·scale; keep num·max_in_mass < 2^63 — at
   the default scale=1e12 that allows in-neighborhood mass up to ~1e17,
@@ -38,10 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from metadata_driven_etl_spark.operators.dedup import (
-    _iteration_regime,
-    _materialize,
-)
+from metadata_driven_etl_spark.materialize import materialize
+from metadata_driven_etl_spark.operators.dedup import _iteration_regime
 
 DEFAULT_SCALE = 10**12
 
@@ -54,7 +52,6 @@ def pagerank_fixed_point(
     damping_num: int = 85,
     damping_den: int = 100,
     scale: int = DEFAULT_SCALE,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """PageRank over a DIRECTED edge list, ``iterations`` rounds of the
     damped recurrence in exact fixed-point integer arithmetic:
@@ -84,16 +81,15 @@ def pagerank_fixed_point(
         F.count(F.lit(1)).alias("_outdeg")
     )
     # Degrees ride along on every edge row so each round joins ONE frame.
-    e_deg = _materialize(
+    e_deg = materialize(
         e.join(deg, F.col("src") == F.col("_deg_src")).select(
             "src", "dst", "_outdeg"
         ),
-        checkpoint_dir,
     )
     base = ((damping_den - damping_num) * scale) // damping_den
     # Gate the small-graph regime (dedup._iteration_regime) on the edge
     # count; the count also eagerly pays the e_deg materialization the
-    # first round would pay. Lazy localCheckpoint compiles each round's
+    # first round would pay. A lazy materialize compiles each round's
     # physical plan at CALL time, so plans built inside the regime bake
     # the small partitioning in even though execution happens at the
     # caller's action.
@@ -101,11 +97,10 @@ def pagerank_fixed_point(
     with _iteration_regime(e_deg.sparkSession, n_edges) as small_parts:
         if small_parts is not None:
             e_deg = e_deg.coalesce(small_parts)
-        nodes = _materialize(
+        nodes = materialize(
             e.select(F.col("src").alias("node"))
             .union(e.select(F.col("dst").alias("node")))
             .distinct(),
-            checkpoint_dir,
         )
         ranks = nodes.select(
             "node", F.lit(scale).cast("long").alias("rank")
@@ -129,7 +124,7 @@ def pagerank_fixed_point(
             # LEFT join from the full universe: a node with no in-mass
             # this round still holds the teleport base (directed-graph
             # contract).
-            ranks = _materialize(
+            ranks = materialize(
                 nodes.join(
                     contrib_j, F.col("node") == F.col("_cnode"), "left"
                 )
@@ -143,7 +138,6 @@ def pagerank_fixed_point(
                         )
                     ).alias("rank"),
                 ),
-                checkpoint_dir,
             )
     return ranks
 
@@ -232,14 +226,12 @@ def triangle_counts(
     orientation (and therefore every intermediate frame) is unique.
 
     Materialization: ``canon`` feeds the degree count AND the orientation
-    join, and ``oriented`` feeds three join sides — both localCheckpoint,
+    join, and ``oriented`` feeds three join sides — both materialized,
     so the (possibly expensive) upstream edge derivation executes ONCE,
     not 2+3 times (the repo's multi-consumer discipline; measured 5.6s →
     ~2s on the copurchase workload at sf0.1).
     """
-    canon = _canonical_undirected(edges, src_col, dst_col).localCheckpoint(
-        eager=False
-    )
+    canon = materialize(_canonical_undirected(edges, src_col, dst_col))
     deg = (
         canon.select(F.col("u").alias("node"))
         .union(canon.select(F.col("v").alias("node")))
@@ -253,11 +245,11 @@ def triangle_counts(
               F.col("v") == F.col("_nv"))
     )
     lower_first = F.struct("du", "u") < F.struct("dv", "v")
-    oriented = ed.select(
+    oriented = materialize(ed.select(
         F.when(lower_first, F.col("u")).otherwise(F.col("v")).alias("a"),
         F.when(lower_first, F.col("v")).otherwise(F.col("u")).alias("b"),
         F.when(lower_first, F.col("dv")).otherwise(F.col("du")).alias("db"),
-    ).localCheckpoint(eager=False)
+    ))
     o1, o2 = oriented.alias("o1"), oriented.alias("o2")
     wedges = o1.join(
         o2,
@@ -353,9 +345,7 @@ def resource_allocation_topk(
     so a pair needs > 2^63/scale ≈ 9e6 common neighbors to overflow —
     lower ``scale`` for denser graphs.
     """
-    canon = _canonical_undirected(edges, src_col, dst_col).localCheckpoint(
-        eager=False
-    )
+    canon = materialize(_canonical_undirected(edges, src_col, dst_col))
     adj = canon.select(
         F.col("u").alias("z"), F.col("v").alias("nbr")
     ).union(canon.select(F.col("v").alias("z"), F.col("u").alias("nbr")))
@@ -365,7 +355,7 @@ def resource_allocation_topk(
         .where(F.col("d") <= max_degree)
         .select("z", F.expr(f"{scale} div d").alias("w"))
     )
-    adjw = adj.join(w, on="z").localCheckpoint(eager=False)
+    adjw = materialize(adj.join(w, on="z"))
     l, r = adjw.alias("l"), adjw.alias("r")
     pairs = (
         l.join(
@@ -432,7 +422,6 @@ def kcore_peel(
     rounds: int = 3,
     src_col: str = "src",
     dst_col: str = "dst",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Bounded-round k-core peeling over an UNDIRECTED graph: repeatedly
     delete every node whose current degree is < k (with its edges);
@@ -446,18 +435,17 @@ def kcore_peel(
     Scale (100 TB): per round ONE degree aggregation over the live edge
     list + two semi-joins filtering both endpoints — all equi-keyed, and
     the edge frame only ever SHRINKS. Lineage is truncated per round
-    (localCheckpoint / durable checkpoint_dir), and below the small-graph
-    threshold the survivor set broadcasts, making each round
-    Exchange-free (the _iteration_regime seam shared with CC/PageRank).
+    (``materialize``), and below the small-graph threshold the survivor
+    set broadcasts, making each round Exchange-free (the
+    _iteration_regime seam shared with CC/PageRank).
     """
     if k < 1 or rounds < 1:
         raise ValueError("kcore_peel: k and rounds must be >= 1")
     canon = _canonical_undirected(edges, src_col, dst_col)
-    adj = _materialize(
+    adj = materialize(
         canon.select(F.col("u").alias("src"), F.col("v").alias("dst")).union(
             canon.select(F.col("v").alias("src"), F.col("u").alias("dst"))
         ),
-        checkpoint_dir,
     )
     n_edges = adj.count()
     with _iteration_regime(adj.sparkSession, n_edges) as small_parts:
@@ -475,13 +463,12 @@ def kcore_peel(
                 if small_parts is not None
                 else survivors
             )
-            adj = _materialize(
+            adj = materialize(
                 adj.join(
                     s.withColumnRenamed("node", "src"), on="src", how="semi"
                 ).join(
                     s.withColumnRenamed("node", "dst"), on="dst", how="semi"
                 ).select("src", "dst"),
-                checkpoint_dir,
             )
     return adj.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("core_deg")

@@ -18,6 +18,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from metadata_driven_etl_spark.materialize import materialize
+
 
 def join_inner(
     fact: DataFrame,
@@ -139,7 +141,6 @@ def blocked_levenshtein_pairs(
     text_col: str,
     block_col: str,
     max_dist: int = 3,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Record linkage: every unordered same-block pair within Levenshtein
     ``max_dist``. Output: (block, id_a, id_b, edit_dist), id_a < id_b.
@@ -155,9 +156,8 @@ def blocked_levenshtein_pairs(
     pre-split giant blocks the way ``dedup.lsh_candidate_pairs`` caps
     bucket fan-out). The projected side is materialized once — a
     self-join gets no ReusedExchange, so without it the source scan and
-    projection run twice (``checkpoint_dir`` switches the materialization
-    to a durable reliable checkpoint, the same seam every dedup pair
-    generator exposes).
+    projection run twice (see
+    :func:`~metadata_driven_etl_spark.materialize.materialize`).
 
     Two per-pair prunes keep the block-quadratic core cheap: a length
     band (``|len(a)-len(b)| > max_dist`` implies ``dist > max_dist``, and
@@ -171,15 +171,12 @@ def blocked_levenshtein_pairs(
     real lever, see the workload's brand+type composite key (8M → 1.3M
     pairs, 7.1s → 2.6s at sf0.1).
     """
-    from metadata_driven_etl_spark.operators.dedup import _materialize
-
-    src = _materialize(
+    src = materialize(
         df.select(
             F.col(block_col).alias("block"),
             F.col(id_col).alias("id_a"),
             F.col(text_col).alias("text_a"),
         ),
-        checkpoint_dir,
     )
     right = src.select(
         F.col("block"),

@@ -26,6 +26,8 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from metadata_driven_etl_spark.materialize import materialize
+
 
 def asof_join(
     left: DataFrame,
@@ -789,7 +791,7 @@ def attribute_time_decay(
         )
         / F.lit(86_400_000_000)
     ).cast("int")
-    agg = (
+    agg = materialize(
         pairs.select(
             F.col("r.channel").alias("channel"),
             age_days.alias("_age_days"),
@@ -802,7 +804,6 @@ def attribute_time_decay(
         )
         .groupBy("channel")
         .agg(F.sum("_wt").alias("weight_sum"))
-        .localCheckpoint(eager=False)
     )
     tot = agg.agg(F.sum("weight_sum").alias("_w"))
     return agg.crossJoin(F.broadcast(tot)).select(
@@ -908,7 +909,7 @@ def funnel_rates(
         F.sum((F.col("funnel_step") >= k).cast("long")).alias(f"r{k}")
         for k in range(1, len(steps) + 1)
     ] + [F.count(F.lit(1)).alias("n_users")]
-    c = d.agg(*aggs).localCheckpoint(eager=False)
+    c = materialize(d.agg(*aggs))
     dbl = lambda name: F.col(name).cast("double")  # noqa: E731
     out = None
     for k, name in enumerate(steps, start=1):
@@ -957,10 +958,12 @@ def funnel_rates_multi(
     which at 100 TB is the entire cost of the sweep. Step-1 flags and
     anchors are window-independent and computed once.
     """
-    c = funnel_rates_multi_scalar(
-        events, steps, windows, user_col=user_col, type_col=type_col,
-        ts_col=ts_col, order_col=order_col, mode=mode,
-    ).localCheckpoint(eager=False)
+    c = materialize(
+        funnel_rates_multi_scalar(
+            events, steps, windows, user_col=user_col, type_col=type_col,
+            ts_col=ts_col, order_col=order_col, mode=mode,
+        )
+    )
     dbl = lambda name: F.col(name).cast("double")  # noqa: E731
     out = None
     for i, (label, _) in enumerate(windows):
@@ -999,7 +1002,7 @@ def funnel_rates_multi_scalar(
 ) -> DataFrame:
     """The ONE-ROW scalar aggregate behind :func:`funnel_rates_multi`
     (n_users plus every window's per-level reached-counts), BEFORE the
-    lineage-truncating localCheckpoint. Split out (ADVICE r12) so the
+    lineage-truncating ``materialize``. Split out (ADVICE r12) so the
     single-Exchange plan claim is assertable: explaining the checkpointed
     frame shows only ``Scan ExistingRDD``, which made the one-shuffle
     test pin vacuous — tests explain THIS frame instead."""
@@ -1081,13 +1084,12 @@ def stickiness_daily(
     new_vs_returning NULL discipline). Emits ``(day, dau long,
     mau long, stickiness double)``.
     """
-    ud = (
+    ud = materialize(
         events.filter(
             F.col(user_col).isNotNull() & F.col(ts_col).isNotNull()
         )
         .select(user_col, F.to_date(ts_col).alias("day"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     bounds = ud.agg(F.max("day").alias("d1"))
     dau = ud.groupBy("day").agg(F.count(F.lit(1)).alias("dau"))
@@ -1505,7 +1507,7 @@ def resample_linear_interp(
     recomputed the upstream aggregation twice and benched 2× slower).
     """
     key_cols = [F.col(k) for k in keys]
-    obs = obs.localCheckpoint(eager=False)
+    obs = materialize(obs)
     bounds = obs.groupBy(*keys).agg(
         F.min(day_col).alias("_d0"), F.max(day_col).alias("_d1")
     )
@@ -1589,7 +1591,7 @@ def growth_accounting(
     shuffle; rollups are |months|-row. Emits ``(month_index, n_new,
     n_retained, n_resurrected, n_churned)``.
     """
-    a = (
+    a = materialize(
         events.where(F.col(user_col).isNotNull())
         .select(
             F.col(user_col).alias("u"),
@@ -1600,7 +1602,6 @@ def growth_accounting(
             ).alias("mi"),
         )
         .distinct()
-        .localCheckpoint(eager=False)
     )
     fm = a.groupBy("u").agg(F.min("mi").alias("first_mi"))
     p = a.select(F.col("u").alias("pu"), (F.col("mi") + 1).alias("pmi"))

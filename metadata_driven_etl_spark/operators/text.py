@@ -18,6 +18,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from metadata_driven_etl_spark.materialize import materialize
+
 # --- canonical normalization (shared by dedup + text ops) -------------------
 
 
@@ -525,16 +527,15 @@ def trigram_novelty(
     (min-id in the same pass), one inverted-index equi-join carries the
     first-claimant back, one per-doc rollup — never all-pairs. The gram
     frame is consumed twice (claimant build + scoring) and so is
-    localCheckpoint-materialized once."""
+    materialized once."""
     toks = docs.select(id_col, tokens(text_col).alias("__toks"))
-    tri = (
+    tri = materialize(
         toks.where(F.size("__toks") >= 3)
         .select(
             id_col,
             F.explode(trigrams(F.col("__toks"))).alias("gram"),
         )
         .distinct()
-        .localCheckpoint(eager=False)
     )
     first = tri.groupBy("gram").agg(F.min(id_col).alias("__first"))
     return (
@@ -558,8 +559,7 @@ def bigram_lm_score(
     arithmetic — see workloads.text_bigram_lm_score for the full
     rationale). Bigrams form map-side; ONE shuffle builds the frequency
     model; one inverted-index join scores docs. The bigram frame is
-    consumed twice (model + scoring) and so is localCheckpoint-
-    materialized once. Shared by the workload and the scaling probe so
+    consumed twice (model + scoring) and so is materialized once. Shared by the workload and the scaling probe so
     the measured curve always describes the shipped operator.
 
     ``min_freq`` is the KenLM-style pruning floor: bigrams with corpus
@@ -575,11 +575,10 @@ def bigram_lm_score(
     against) — at a sane floor those are exactly the gibberish docs a
     typicality filter exists to flag.
     """
-    pairs = (
+    pairs = materialize(
         docs.select(id_col, bigrams(text_col).alias("bigs"))
         .filter(F.size("bigs") >= 1)
         .select(id_col, F.explode("bigs").alias("bigram"))
-        .localCheckpoint(eager=False)
     )
     counts = pairs.groupBy("bigram").agg(
         F.count(F.lit(1)).alias("bg_freq")
@@ -663,17 +662,17 @@ def doc_cosine_pairs(
         tf = tf.join(kept, F.col("term") == F.col("_kept_term")).drop(
             "_kept_term"
         )
-    tf = tf.localCheckpoint(eager=False)
+    tf = materialize(tf)
     # Materialize the norms ONCE (guide §2.4, r13): the two rename-only
     # consumers below (na/nb join sides) are separate subtrees to Spark,
     # so without this the |corpus|-row norm aggregation (HashAggregate +
     # Exchange over the full postings frame) executed twice — once per
     # side — in the r12 plan. The materialized frame is |docs| rows of
     # (id, bigint).
-    norms = (
+    # Lazy: eager measured slower in an A/B (text_doc_sim_cosine 5.2→5.4 s).
+    norms = materialize(
         tf.groupBy(id_col)
         .agg(F.sum(F.col("tf") * F.col("tf")).alias("norm_sq"))
-        .localCheckpoint(eager=False)
     )
     a = tf.select(
         F.col("term").alias("_term_a"),
@@ -825,7 +824,7 @@ def build_postings(
         if not vocabulary:
             raise ValueError("build_postings: empty vocabulary")
         toks = toks.filter(F.col("tok").isin(*vocabulary))
-    return toks.localCheckpoint(eager=False)
+    return materialize(toks)
 
 
 def phrase_match_in_postings(
@@ -892,10 +891,9 @@ def rake_keyphrase_scores(
         F.col("stop") == 0
     )
     w_ph = Window.partitionBy(id_col, "island")
-    kept = (
+    kept = materialize(  # feeds word stats AND phrases
         isl.withColumn("plen", F.count(F.lit(1)).over(w_ph))
         .filter(F.col("plen") <= max_phrase)
-        .localCheckpoint(eager=False)  # feeds word stats AND phrases
     )
     ws = kept.groupBy("tok").agg(
         F.count(F.lit(1)).alias("freq"), F.sum("plen").alias("deg")

@@ -14,6 +14,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from metadata_driven_etl_spark.materialize import materialize
+
 
 def dedup_row_number(
     df: DataFrame,
@@ -184,7 +186,6 @@ def _exact_floor_div(a: Column, b: Column) -> Column:
 def _global_rank_frame(
     df: DataFrame,
     order_by: Sequence[Column],
-    checkpoint_dir: str | None = None,
 ) -> tuple[DataFrame, Column, Column]:
     """Shared core of :func:`distributed_ntile` / :func:`distributed_rank`:
     range-repartition on the order expressions, sort within partitions,
@@ -196,7 +197,7 @@ def _global_rank_frame(
 
     The returned frame still carries the ``_dnt_*`` scratch columns;
     callers drop them after deriving their output."""
-    ranged = _materialize_ranked(df, order_by, checkpoint_dir)
+    ranged = _materialize_ranked(df, order_by)
     pid = F.shiftright(F.col("_dnt_mid"), 33)
     local_ix = F.col("_dnt_mid").bitwiseAND(F.lit((1 << 33) - 1))
     counts = (
@@ -233,15 +234,11 @@ def _global_rank_frame(
 def _materialize_ranked(
     df: DataFrame,
     order_by: Sequence[Column],
-    checkpoint_dir: str | None,
 ) -> DataFrame:
-    from metadata_driven_etl_spark.operators.dedup import _materialize
-
-    return _materialize(
+    return materialize(
         df.repartitionByRange(*order_by)
         .sortWithinPartitions(*order_by)
         .withColumn("_dnt_mid", F.monotonically_increasing_id()),
-        checkpoint_dir,
     )
 
 
@@ -250,7 +247,6 @@ def distributed_rank(
     order_by: Sequence[Column],
     out_col: str,
     total_col: str | None = None,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """``row_number() OVER (ORDER BY ...)`` without the single-partition
     sort — the rank sibling of :func:`distributed_ntile` (VERDICT r9
@@ -278,7 +274,7 @@ def distributed_rank(
             raise ValueError(
                 f"distributed_rank: output column {c!r} collides with input"
             )
-    ranked, r, total = _global_rank_frame(df, order_by, checkpoint_dir)
+    ranked, r, total = _global_rank_frame(df, order_by)
     out = ranked.withColumn(out_col, r)
     if total_col is not None:
         out = out.withColumn(total_col, total)
@@ -291,7 +287,6 @@ def distributed_running_sum(
     value_col: str,
     out_col: str,
     total_col: str | None = None,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Inclusive ``SUM(value) OVER (ORDER BY ...)`` without the
     single-partition sort — the cumulative-sum sibling of
@@ -351,7 +346,7 @@ def distributed_running_sum(
         raise ValueError(
             f"distributed_running_sum: value column {value_col!r} missing"
         )
-    ranged = _materialize_ranked(df, order_by, checkpoint_dir)
+    ranged = _materialize_ranked(df, order_by)
     pid = F.shiftright(F.col("_dnt_mid"), 33)
     sums = (
         ranged.select(pid.alias("_dnt_pid"), F.col(value_col).alias("_v"))
@@ -401,7 +396,6 @@ def distributed_ntile(
     n: int,
     order_by: Sequence[Column],
     out_col: str,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """``ntile(n) OVER (ORDER BY ...)`` without the single-partition sort.
 
@@ -445,12 +439,7 @@ def distributed_ntile(
     # recomputes per consumer and chained ntiles blow the plan up
     # exponentially (repo-wide materialize-once discipline).  The id is
     # frozen INSIDE the checkpoint so both consumers see one assignment.
-    # ``checkpoint_dir`` is the durable seam (VERDICT r8 item 5): the
-    # local default keeps checkpoint blocks in executor storage (executor
-    # loss recomputes the range shuffle); a durable path survives it —
-    # same `_materialize` contract as connected_components, including the
-    # eager-materialization caveat in its docstring.
-    ranked, r, total = _global_rank_frame(df, order_by, checkpoint_dir)
+    ranked, r, total = _global_rank_frame(df, order_by)
     q = _exact_floor_div(total, F.lit(n).cast("long"))
     rem = total % n
     big = rem * (q + 1)

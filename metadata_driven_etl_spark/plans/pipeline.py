@@ -35,6 +35,7 @@ from metadata_driven_etl_spark.config.model import (
 )
 from metadata_driven_etl_spark.dq.engine import DataQualityEngine, DQRejectError
 from metadata_driven_etl_spark.io.writer import TableFormat
+from metadata_driven_etl_spark.materialize import materialize
 from metadata_driven_etl_spark.metadata.audit import AuditLogger
 from metadata_driven_etl_spark.metadata.control import ControlTable
 from metadata_driven_etl_spark.metadata.metrics import DataDictionary, DQMetricsStore
@@ -564,7 +565,7 @@ class GoldLayer(_LayerBase):
             mode = "scd2_first_full"
         # the maintained path reads the target it overwrites: sever
         # lineage first (the TableFormat.merge discipline)
-        df = df.localCheckpoint(eager=True)
+        df = materialize(df, eager=True)
         rows = _counted_write(
             df,
             lambda d: fmt.overwrite(
@@ -617,7 +618,7 @@ class GoldLayer(_LayerBase):
         # the copy write would persist whatever an upstream writer landed
         # in between — a snapshot that does NOT match the applied delta,
         # silently skipping those rows' changes on every later run.
-        new = spark.table(m.snapshot_table).localCheckpoint(eager=True)
+        new = materialize(spark.table(m.snapshot_table), eager=True)
         # Crash-safety without a transactional store: the target write
         # and the snapshot advance are two non-atomic writes, and EITHER
         # stale half silently corrupts all later deltas (stale snapshot →
@@ -664,7 +665,7 @@ class GoldLayer(_LayerBase):
         # registers the frame that is actually written (the full-refresh
         # path registers WITH the timestamp; registering the pre-stamp
         # frame here would drop a real column from the schema record).
-        df = df.localCheckpoint(eager=True).withColumn(
+        df = materialize(df, eager=True).withColumn(
             "gold_insert_timestamp", F.current_timestamp()
         )
         rows = _counted_write(

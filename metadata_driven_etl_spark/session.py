@@ -81,6 +81,13 @@ def get_spark(
 
 
 def get_local_spark(cpus: int | None = None, **kwargs) -> SparkSession:
-    """Local-mode session used by tests and bench.py."""
-    n = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+    """Local-mode session used by tests and bench.py: ``local[cpus]``,
+    else ``local[$SPARK_GRAFT_CPUS]``, else one thread per host core (also
+    when the variable is not a positive integer)."""
+    try:
+        n = cpus or int(os.environ["SPARK_GRAFT_CPUS"])
+    except (KeyError, ValueError):
+        n = 0
+    if n < 1:
+        n = os.cpu_count() or 8
     return get_spark(master=f"local[{n}]", **kwargs)

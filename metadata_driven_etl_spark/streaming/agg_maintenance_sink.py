@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from metadata_driven_etl_spark.io.writer import TableFormat
+from metadata_driven_etl_spark.materialize import materialize
 from metadata_driven_etl_spark.operators.merge import apply_signed_delta
 from metadata_driven_etl_spark.streaming.sink import refresh_owner_tables
 
@@ -140,7 +141,7 @@ def agg_maintenance_stream(
         # materialize BEFORE the overwrite: the plan reads the same table
         # it is about to replace (read-overwrite hazard), and the state is
         # aggregate-sized, not corpus-sized
-        updated = updated.localCheckpoint(eager=True)
+        updated = materialize(updated, eager=True)
         table_format.overwrite(updated, agg_table)
         refresh_owner_tables(owner, agg_table)
 

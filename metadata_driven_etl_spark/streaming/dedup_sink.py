@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from metadata_driven_etl_spark.io.writer import TableFormat
+from metadata_driven_etl_spark.materialize import materialize
 from metadata_driven_etl_spark.operators.dedup import (
     incremental_dedup_survivors,
     lsh_bands,
@@ -133,7 +134,7 @@ def dedup_stream(
         )
         # materialize once: appended to BOTH tables below, and the second
         # append must see the same survivor set the first one wrote
-        survivors = survivors.localCheckpoint(eager=True)
+        survivors = materialize(survivors, eager=True)
         if survivors.isEmpty():
             return
         if not out_done:

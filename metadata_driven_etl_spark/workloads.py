@@ -28,6 +28,7 @@ from metadata_driven_etl_spark.functions import (
     sql_dsum,
     sql_isum,
 )
+from metadata_driven_etl_spark.materialize import materialize
 from metadata_driven_etl_spark.operators import (
     aggregations as agg_ops,
 )
@@ -1255,7 +1256,7 @@ def similarity_ann_lsh_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the exact side is the |Q|×|corpus| brute-force scorer — fine
     for a 20-query audit batch (this is a verification harness; the
     production operator is the index probe alone)."""
-    emb = _t(spark, sf_dir, "embeddings").localCheckpoint(eager=False)
+    emb = materialize(_t(spark, sf_dir, "embeddings"))
     queries = emb.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("query_id"), F.col("embedding")
     )
@@ -1637,7 +1638,7 @@ def similarity_ann_ivf_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the driver artifact; per-query IVF recall legitimately dips to
     0.2 on adversarial queries, so the contract is the batch-level one
     (the recall test pins the same shape at ≥0.6 with margin)."""
-    emb = _emb(spark, sf_dir).localCheckpoint(eager=False)
+    emb = materialize(_emb(spark, sf_dir))
     queries = emb.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("query_id"), F.col("embedding")
     )
@@ -3425,9 +3426,9 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep-one-copy pipeline a real corpus build runs."""
     # tokenize once, materialize once: docs feeds the pair generator, the
     # CC vertex set, and the scorer (same pattern as corpus_clean_pipeline)
-    docs = _docs(spark, sf_dir).select(
+    docs = materialize(_docs(spark, sf_dir).select(
         "doc_id", text_ops.tokens("text").alias("_toks")
-    ).localCheckpoint(eager=False)
+    ))
     pairs = dedup_ops.lsh_candidate_pairs(docs, tokens_col="_toks")
     clusters = dedup_ops.connected_components(docs.select("doc_id"), pairs)
     scored = docs.select(
@@ -3533,7 +3534,7 @@ def multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # not cover the Python stage — materialize the (id, phash) frame
     # (hash-sized, payloadless) so decode+hash runs ONCE; at 100 TB the
     # decode is the dominant cost and must never execute per join side
-    hashed = hashed.localCheckpoint(eager=False)
+    hashed = materialize(hashed)
     return phash_near_dup_pairs(hashed, max_hamming=2, id_col="media_id")
 
 
@@ -3831,11 +3832,8 @@ def corpus_clean_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     clean = _corpus_clean_survivors(spark, sf_dir)
     # clean feeds THREE consumers (pair generation, the CC vertex set, and
     # keep-best scoring) — materialize it once instead of recomputing the
-    # scan→tokenize→filter→anti-join chain per branch. localCheckpoint
-    # stores executor-local blocks (freed when the frame is GC'd); a real
-    # cluster run would use the durable checkpoint-dir seam
-    # connected_components already exposes.
-    clean = clean.localCheckpoint(eager=False)
+    # scan→tokenize→filter→anti-join chain per branch.
+    clean = materialize(clean)
     pairs = dedup_ops.lsh_candidate_pairs(clean, tokens_col="_toks")
     clusters = dedup_ops.connected_components(clean.select("doc_id"), pairs)
     scored = clean.select(
@@ -4902,8 +4900,7 @@ def text_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle builds the frequency table, one shuffle joins scores back and
     aggregates per doc — the inverted-index join pattern, never all-pairs.
     The bigram frame is consumed twice (model build + scoring), so it is
-    localCheckpoint-materialized once (self-join sides get no
-    ReusedExchange; on a real cluster use a durable checkpoint dir).
+    materialized once (self-join sides get no ReusedExchange).
     """
     return text_ops.bigram_lm_score(_docs(spark, sf_dir))
 
@@ -5005,8 +5002,8 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     CC iterates only edge-touched nodes, the keep-best window runs only
     over multi-member clusters. The embeddings frame feeds pair-gen, the
     vertex set, and the scorer — materialized ONCE (self-join sides get no
-    ReusedExchange; durable checkpoint on a real cluster)."""
-    emb = _emb(spark, sf_dir).localCheckpoint(eager=False)
+    ReusedExchange)."""
+    emb = materialize(_emb(spark, sf_dir))
     pairs = sim_ops.embedding_near_dup_pairs(emb, threshold=0.3)
     clusters = dedup_ops.connected_components(
         emb.select("vec_id"), pairs, id_col="vec_id"
@@ -5241,14 +5238,14 @@ def text_bm25_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         # dispatch), not a closure variable
         return F.size(F.filter(toks, lambda x: x == F.lit(term)))
 
-    f = docs.select(
+    f = materialize(docs.select(
         "doc_id",
         F.size(toks).cast("long").alias("dl"),
         *[
             _tf(t).cast("long").alias(f"tf{i}")
             for i, t in enumerate(_BM25_TERMS)
         ],
-    ).localCheckpoint(eager=False)
+    ))
     s = f.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("dl").alias("s_tokens"),
@@ -5337,14 +5334,13 @@ def domain_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # each consumer (multi-consumer frames get no ReusedExchange), and the
     # plan pin (test_llm_ops_plans) would see two corpus shuffles.  The
     # frame is tiny (|domains| rows), so the checkpoint is ~free.
-    per = (
+    per = materialize(
         _docs(spark, sf_dir)
         .groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum(text_ops.token_count("text")).alias("n_tokens"),
         )
-        .localCheckpoint(eager=False)
     )
     tot = per.agg(
         F.count(F.lit(1)).alias("n_domains"),
@@ -5406,8 +5402,8 @@ def collocation_pmi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     low-frequency pathology), top-{_PMI_TOPK} with a lexicographic
     tie-break.
 
-    Scale: tokenize ONCE — the token-array frame is localCheckpoint-
-    materialized because it feeds three consumers (unigram counts, the
+    Scale: tokenize ONCE — the token-array frame is materialized
+    because it feeds three consumers (unigram counts, the
     corpus total, and the bigram stream) and Spark re-executes shared
     lineage per consumer otherwise; two partial-aggregated counts; the
     count products run in DECIMAL(20,0) (n·c(xy) with n~1e10+ tokens and
@@ -5415,9 +5411,9 @@ def collocation_pmi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     unigram counts join back by plain equi-joins (shuffle on word —
     broadcast is wrong here, a real vocabulary is millions of words);
     final top-k is TakeOrderedAndProject, no global sort."""
-    toks = _docs(spark, sf_dir).select(
+    toks = materialize(_docs(spark, sf_dir).select(
         text_ops.tokens("text").alias("t")
-    ).localCheckpoint(eager=False)
+    ))
     # Aggregate the token stream ONCE (guide §2.3, r13): the unigram
     # counts previously re-aggregated per consumer — the u1 join side,
     # the u2 join side, and the corpus total each ran their own explode+
@@ -5425,11 +5421,10 @@ def collocation_pmi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plan). ucnt is materialized once (|vocab| rows) and the total is
     # its exact integer rollup: n = Σ_w c(w), the same BIGINT the direct
     # count produced.
-    ucnt = (
+    ucnt = materialize(
         toks.select(F.explode("t").alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)
     )
     tot = ucnt.agg(F.sum("c").alias("n"))
     pairs = toks.select(
@@ -5688,10 +5683,9 @@ def text_top_terms_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = docs.select(
         "doc_id", F.explode(text_ops.tokens("text")).alias("term")
     )
-    tf = (
+    tf = materialize(
         tok.groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=False)
     )
     df_ = tf.groupBy(F.col("term").alias("_df_term")).agg(
         F.count(F.lit(1)).alias("df")
@@ -5884,10 +5878,9 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle join ranks⋈edges + one partial-aggregated sum; the
     degree-annotated edge list is materialized once."""
     li = _t(spark, sf_dir, "lineitem")
-    pairs = (
+    pairs = materialize(
         cooccur_ops.basket_pair_counts(li, "l_orderkey", "l_partkey")
         .filter(F.col("n_baskets") >= 2)
-        .localCheckpoint(eager=False)
     )
     edges = pairs.select(
         F.col("item_a").alias("src"), F.col("item_b").alias("dst")
@@ -5985,10 +5978,9 @@ def chisq_cells_flag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus shuffle); row/col/grand totals derive from the |cells|-row
     frame and broadcast back."""
     li = _t(spark, sf_dir, "lineitem")
-    cells = (
+    cells = materialize(
         li.groupBy("l_returnflag", "l_linestatus")
         .agg(F.count(F.lit(1)).alias("n_obs"))
-        .localCheckpoint(eager=False)
     )
     rt = cells.groupBy(F.col("l_returnflag").alias("_rf")).agg(
         F.sum("n_obs").alias("row_tot")
@@ -6695,14 +6687,13 @@ def graph_assortativity_copurchase(
     broadcast-able joins + one single-row moment aggregation — the fact
     table is the EDGE list, never re-shuffled."""
     edges = _copurchase_edges(spark, sf_dir)
-    canon = (
+    canon = materialize(
         edges.where(F.col("src") != F.col("dst"))
         .select(
             F.least("src", "dst").alias("u"),
             F.greatest("src", "dst").alias("v"),
         )
         .distinct()
-        .localCheckpoint(eager=False)
     )
     deg = (
         canon.select(F.col("u").alias("node"))
@@ -6989,10 +6980,10 @@ def mannwhitney_u_price_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # The domain frame feeds the rank window AND the totals — materialize
     # it once (the multi-consumer discipline) so the fact scans once.
-    pv = v.groupBy("cents").agg(
+    pv = materialize(v.groupBy("cents").agg(
         F.sum("isr").alias("i1"),
         F.sum(F.lit(1) - F.col("isr")).alias("i2"),
-    ).localCheckpoint(eager=False)
+    ))
     wb = Window.orderBy("cents").rowsBetween(Window.unboundedPreceding, -1)
     c = pv.select(
         "i1",
@@ -7087,10 +7078,9 @@ def benford_digit_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # The 9-row digit frame feeds the cells AND the total — materialize
     # it once so the corpus scans once.
-    obs = (
+    obs = materialize(
         o.groupBy("digit")
         .agg(F.count(F.lit(1)).alias("n_obs"))
-        .localCheckpoint(eager=False)
     )
     tot = obs.agg(F.sum("n_obs").alias("n"))
     p = F.lit(None).cast("double")
@@ -7362,18 +7352,17 @@ def allocate_largest_remainder(
     from pyspark.sql import Window
 
     cust = _t(spark, sf_dir, "customer")
-    w = (
+    w = materialize(
         cust.groupBy("c_nationkey")
         .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=False)
     )
     t = w.agg(F.sum("n").alias("tot"))
-    b = w.crossJoin(F.broadcast(t)).select(
+    b = materialize(w.crossJoin(F.broadcast(t)).select(
         "c_nationkey",
         "n",
         F.expr("(1000 * n) DIV tot").alias("base"),
         ((1000 * F.col("n")) % F.col("tot")).alias("rem"),
-    ).localCheckpoint(eager=False)
+    ))
     leftover = b.agg((F.lit(1000) - F.sum("base")).alias("leftover"))
     rk = F.row_number().over(
         Window.orderBy(F.col("rem").desc(), F.col("c_nationkey"))
@@ -7449,7 +7438,7 @@ def cuped_adjusted_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation pass however many units exist."""
     d38 = "decimal(38,0)"
     o = _t(spark, sf_dir, "orders")
-    u = (
+    u = materialize(
         o.groupBy("o_custkey")
         .agg(
             F.count(F.lit(1)).alias("x"),
@@ -7458,7 +7447,6 @@ def cuped_adjusted_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("y"),
         )
         .withColumn("variant", (F.col("o_custkey") % 2).cast("int"))
-        .localCheckpoint(eager=False)
     )
     g = u.agg(
         F.count(F.lit(1)).cast(d38).alias("n"),
@@ -7552,10 +7540,9 @@ def best_split_gini_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("pos"),
     )
-    pv = (
+    pv = materialize(
         d.groupBy("q")
         .agg(F.count(F.lit(1)).alias("cnt"), F.sum("pos").alias("p"))
-        .localCheckpoint(eager=False)
     )
     w = Window.orderBy("q").rowsBetween(Window.unboundedPreceding, 0)
     c = pv.select(
@@ -7650,14 +7637,13 @@ def survival_life_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("e"),
         )
     )
-    pv = (
+    pv = materialize(
         per_order.groupBy("t")
         .agg(
             F.sum("e").alias("d"),
             F.sum(F.lit(1) - F.col("e")).alias("c"),
             F.count(F.lit(1)).alias("cnt"),
         )
-        .localCheckpoint(eager=False)
     )
     tot = pv.agg(F.sum("cnt").alias("n"))
     wb = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, -1)
@@ -7714,10 +7700,9 @@ def rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     # the distinct user-day frame feeds the coverage explode AND the
     # max-day bound — materialize once (multi-consumer discipline)
-    ud = (
+    ud = materialize(
         ev.select("user_id", F.to_date("ts").alias("day"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     bounds = ud.agg(F.max("day").alias("d1"))
     cover = ud.select(
@@ -8246,13 +8231,13 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     o = _t(spark, sf_dir, "orders")
-    u = o.groupBy("o_custkey").agg(
+    u = materialize(o.groupBy("o_custkey").agg(
         F.max(F.to_date("o_orderdate")).alias("last_d"),
         F.count(F.lit(1)).alias("f"),
         F.sum(
             F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long")
         ).alias("m"),
-    ).localCheckpoint(eager=False)
+    ))
     a = u.agg(F.max("last_d").alias("anchor"))
     r = u.crossJoin(F.broadcast(a)).select(
         "o_custkey",
@@ -8414,10 +8399,10 @@ def decile_lift_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = distributed_ntile(
         u, 10, [F.col("spend").desc(), F.col("o_custkey").asc()], "decile"
     )
-    a = d.groupBy("decile").agg(
+    a = materialize(d.groupBy("decile").agg(
         F.count(F.lit(1)).alias("n_units"),
         F.sum("resp").alias("n_resp"),
-    ).localCheckpoint(eager=False)
+    ))
     # 10-row frame: the unpartitioned cumulative window is metadata
     wc = Window.orderBy("decile").rowsBetween(Window.unboundedPreceding, 0)
     c = a.withColumn("cum_resp", F.sum("n_resp").over(wc))
@@ -8769,7 +8754,7 @@ def neyman_allocation_strata(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(q.cast(d38)).cast(d38).alias("t"),
         F.sum((q * q).cast(d38)).cast(d38).alias("s2"),
     )
-    wq = s.select(
+    wq = materialize(s.select(
         "stratum",
         F.col("n").cast("long").alias("n_rows"),
         F.floor(
@@ -8781,9 +8766,9 @@ def neyman_allocation_strata(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("long")
         .alias("weight"),
-    ).localCheckpoint(eager=False)
+    ))
     tot = wq.agg(F.sum("weight").alias("w"))
-    b = wq.crossJoin(F.broadcast(tot)).select(
+    b = materialize(wq.crossJoin(F.broadcast(tot)).select(
         "stratum",
         "n_rows",
         "weight",
@@ -8795,7 +8780,7 @@ def neyman_allocation_strata(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("w") > 0,
             (_NEYMAN_BUDGET * F.col("weight")) % F.col("w"),
         ).alias("rem"),
-    ).localCheckpoint(eager=False)
+    ))
     leftover = b.agg(
         (F.lit(_NEYMAN_BUDGET) - F.sum("base")).alias("leftover")
     )
@@ -9283,9 +9268,9 @@ def rank_movers_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("m").orderBy(
         F.col("cents").desc(), F.col("l_partkey").asc()
     )
-    rk = rev.withColumn(
+    rk = materialize(rev.withColumn(
         "rnk", F.rank().over(w).cast("long")
-    ).localCheckpoint(eager=False)
+    ))
     a = rk.filter(F.col("m") == _MOVERS_M_A).select(
         "l_partkey", F.col("rnk").alias("rank_a")
     )
@@ -9408,14 +9393,14 @@ def distinctive_terms_by_source(
     tok = docs.select(
         "source", F.explode(text_ops.tokens("text")).alias("term")
     )
-    c = tok.groupBy("term").agg(
+    c = materialize(tok.groupBy("term").agg(
         F.sum(
             F.when(F.col("source") == _DISTINCT_SRC_A, 1).otherwise(0)
         ).alias("n_a"),
         F.sum(
             F.when(F.col("source") == _DISTINCT_SRC_B, 1).otherwise(0)
         ).alias("n_b"),
-    ).localCheckpoint(eager=False)
+    ))
     t = c.agg(
         F.sum("n_a").alias("tot_a"), F.sum("n_b").alias("tot_b")
     )
@@ -9484,33 +9469,30 @@ def bfs_levels_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     count per round; hub-degree caps (the RA link-prediction
     discipline) apply when real graphs have power-law hubs."""
     li = _t(spark, sf_dir, "lineitem")
-    pairs = (
+    pairs = materialize(
         cooccur_ops.basket_pair_counts(li, "l_orderkey", "l_partkey")
         .filter(F.col("n_baskets") >= 2)
-        .localCheckpoint(eager=False)
     )
-    edges = pairs.select(
+    edges = materialize(pairs.select(
         F.col("item_a").alias("src"), F.col("item_b").alias("dst")
     ).union(
         pairs.select(F.col("item_b").alias("src"), F.col("item_a").alias("dst"))
-    ).localCheckpoint(eager=False)
-    frontier = (
+    ))
+    frontier = materialize(
         edges.select(F.col("src").alias("node"))
         .filter(F.col("node") % _BFS_SEED_MOD == 0)
         .distinct()
-        .localCheckpoint(eager=False)
     )
     visited = frontier.withColumn("level", F.lit(0).cast("int"))
     out = [visited]
     for k in range(1, _BFS_MAX_LEVEL + 1):
-        nxt = (
+        nxt = materialize(
             edges.join(
                 frontier.withColumnRenamed("node", "src"), "src"
             )
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(visited.select("node"), "node", "left_anti")
-            .localCheckpoint(eager=False)
         )
         lvl = nxt.withColumn("level", F.lit(k).cast("int"))
         out.append(lvl)
@@ -9560,7 +9542,7 @@ def percent_of_parent_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer")
     n = _t(spark, sf_dir, "nation")
     r = _t(spark, sf_dir, "region")
-    rev = (
+    rev = materialize(
         o.join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
         .join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
         .join(F.broadcast(r), n["n_regionkey"] == r["r_regionkey"])
@@ -9572,7 +9554,6 @@ def percent_of_parent_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long")
             ).alias("cents")
         )
-        .localCheckpoint(eager=False)
     )
     reg = rev.groupBy("region").agg(F.sum("cents").alias("region_cents"))
     tot = rev.agg(F.sum("cents").alias("total_cents"))
@@ -10562,7 +10543,7 @@ def acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one fact aggregation to |days|; the lag self-join runs on
     the tiny daily frame (materialized once) against 7 literal lags."""
     d38 = "decimal(38,0)"
-    daily = (
+    daily = materialize(
         _t(spark, sf_dir, "events")
         .groupBy(F.to_date("ts").alias("day"))
         .agg(
@@ -10570,12 +10551,11 @@ def acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.floor(F.col("value") * 100 + 0.5).cast("long")
             ).alias("x")
         )
-        .localCheckpoint(eager=False)
     )
     d0 = daily.agg(F.min("day").alias("d0"))
-    ix = daily.crossJoin(F.broadcast(d0)).select(
+    ix = materialize(daily.crossJoin(F.broadcast(d0)).select(
         "x", F.datediff(F.col("day"), F.col("d0")).cast("long").alias("idx")
-    ).localCheckpoint(eager=False)
+    ))
     s = ix.agg(
         F.count(F.lit(1)).cast(d38).alias("n"),
         F.sum(F.col("x").cast(d38)).cast(d38).alias("sx"),
@@ -11106,7 +11086,7 @@ def token_coverage_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for k in _COVERAGE_KS
     ]
-    s = r.agg(*aggs).localCheckpoint(eager=False)
+    s = materialize(r.agg(*aggs))
     out = None
     for k in _COVERAGE_KS:
         part = s.select(
@@ -11379,14 +11359,13 @@ def churn_monthly_active(spark: SparkSession, sf_dir: str) -> DataFrame:
     max-month bound broadcast in."""
     from pyspark.sql import Window
 
-    um = (
+    um = materialize(
         _t(spark, sf_dir, "orders")
         .select(
             F.col("o_custkey").alias("user_id"),
             F.trunc(F.to_date("o_orderdate"), "month").alias("month"),
         )
         .distinct()
-        .localCheckpoint(eager=False)
     )
     w = Window.partitionBy("user_id").orderBy("month")
     nx = um.withColumn("next_month", F.lead("month").over(w))
@@ -11875,7 +11854,7 @@ def graph_clustering_coefficient(
     one degree aggregation over 2|E| endpoint rows; C is ONE division
     of exactly-converted decimals."""
     d38 = "decimal(38,0)"
-    e = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=False)
+    e = materialize(_copurchase_edges(spark, sf_dir))
     tri = graph_ops.triangle_counts(e).agg(
         F.coalesce(F.sum("n_triangles"), F.lit(0)).cast(d38).alias("n_tri")
     )
@@ -12488,11 +12467,11 @@ def kruskal_wallis_value_by_type(
     )
     dx = f.groupBy("x").agg(F.count(F.lit(1)).alias("c"))
     w = Window.orderBy("x").rowsBetween(Window.unboundedPreceding, 0)
-    ux = dx.select(
+    ux = materialize(dx.select(
         "x",
         (2 * F.sum("c").over(w) - F.col("c") + 1).alias("u"),
         "c",
-    ).localCheckpoint(eager=False)
+    ))
     ties = ux.agg(
         F.sum(
             (
@@ -12699,7 +12678,7 @@ def mann_kendall_trend_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     nested-loop self-join on the tiny checkpointed frame (the
     Theil-Sen/changepoint regime: quadratic in calendar days, CONSTANT
     in fact rows; ~3k days of history = 4.5M sign evaluations)."""
-    daily = (
+    daily = materialize(
         _t(spark, sf_dir, "events")
         .groupBy(F.to_date("ts").alias("day"))
         .agg(
@@ -12707,7 +12686,6 @@ def mann_kendall_trend_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.floor(F.col("value") * 100 + 0.5).cast("long")
             ).alias("x")
         )
-        .localCheckpoint(eager=False)
     )
     a = daily.select(F.col("day").alias("da"), F.col("x").alias("xa"))
     b = daily.select(F.col("day").alias("db"), F.col("x").alias("xb"))
@@ -12821,7 +12799,7 @@ def crosscorr_revenue_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one fact aggregation to |days|; the 8-lag alignment
     self-join runs on the tiny checkpointed daily frame."""
     d38 = "decimal(38,0)"
-    daily = (
+    daily = materialize(
         _t(spark, sf_dir, "events")
         .groupBy(F.to_date("ts").alias("day"))
         .agg(
@@ -12830,13 +12808,12 @@ def crosscorr_revenue_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("x"),
             F.count(F.lit(1)).alias("y"),
         )
-        .localCheckpoint(eager=False)
     )
     d0 = daily.agg(F.min("day").alias("d0"))
-    ix = daily.crossJoin(F.broadcast(d0)).select(
+    ix = materialize(daily.crossJoin(F.broadcast(d0)).select(
         "x", "y",
         F.datediff(F.col("day"), F.col("d0")).cast("long").alias("idx"),
-    ).localCheckpoint(eager=False)
+    ))
     lags = spark.range(0, _XCORR_MAX_LAG + 1).select(
         F.col("id").cast("long").alias("lag")
     )
@@ -13017,7 +12994,7 @@ def changepoint_mean_shift_daily(
     from pyspark.sql import Window
 
     d38 = "decimal(38,0)"
-    daily = (
+    daily = materialize(
         _t(spark, sf_dir, "events")
         .groupBy(F.to_date("ts").alias("day"))
         .agg(
@@ -13025,7 +13002,6 @@ def changepoint_mean_shift_daily(
                 F.floor(F.col("value") * 100 + 0.5).cast("long")
             ).alias("x")
         )
-        .localCheckpoint(eager=False)
     )
     wo = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
     c = daily.select(
@@ -13201,7 +13177,7 @@ def ngram_novelty_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     the first-claimant back, one per-doc then per-source rollup —
     never all-pairs, the bigram-LM plan with min instead of count. The
     gram frame is consumed twice (claimant build + scoring) so it is
-    localCheckpoint-materialized once. Shared core:
+    materialized once. Shared core:
     text.trigram_novelty (also the scaling probe's subject)."""
     docs = _docs(spark, sf_dir)
     per = text_ops.trigram_novelty(docs, text_col="text", id_col="doc_id")
@@ -13272,9 +13248,9 @@ def vocab_growth_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _docs(spark, sf_dir)
-    cut = distributed_ntile(
+    cut = materialize(distributed_ntile(
         docs.select("doc_id"), 10, [F.col("doc_id").asc()], "decile"
-    ).localCheckpoint(eager=False)
+    ))
     tok = docs.select(
         "doc_id", F.explode(text_ops.tokens("text")).alias("token")
     )
@@ -13384,7 +13360,7 @@ def kmeans_assign_recompute(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle); ONE aggregation by cluster ends the iteration — the
     canonical distributed Lloyd step (repeat = loop this plan with the
     new centroids broadcast back)."""
-    q = _emb(spark, sf_dir).select(
+    q = materialize(_emb(spark, sf_dir).select(
         "vec_id",
         F.transform(
             "embedding",
@@ -13392,7 +13368,7 @@ def kmeans_assign_recompute(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "long"
             ),
         ).alias("qv"),
-    ).localCheckpoint(eager=False)
+    ))
     cent = (
         q.orderBy("vec_id")
         .limit(_KM_K)
@@ -13486,7 +13462,7 @@ def embedding_norm_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the 64-dim embedding column is scanned and folded a single
     time."""
     d38 = "decimal(38,0)"
-    q = _emb(spark, sf_dir).select(
+    q = materialize(_emb(spark, sf_dir).select(
         "vec_id",
         "label",
         F.aggregate(
@@ -13499,7 +13475,7 @@ def embedding_norm_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0).cast("long"),
             lambda acc, v: acc + v * v,
         ).alias("norm2q"),
-    ).localCheckpoint(eager=False)
+    ))
     m = q.groupBy("label").agg(
         F.count(F.lit(1)).cast(d38).alias("n"),
         F.sum(F.col("norm2q").cast(d38)).cast(d38).alias("s"),
@@ -13866,7 +13842,7 @@ def theil_sen_slope_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     forms at 10× days = 100× pairs)."""
     from metadata_driven_etl_spark.operators.windows import distributed_rank
 
-    daily = (
+    daily = materialize(
         _t(spark, sf_dir, "events")
         .groupBy(F.to_date("ts").alias("day"))
         .agg(
@@ -13874,12 +13850,11 @@ def theil_sen_slope_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.floor(F.col("value") * 100 + 0.5).cast("long")
             ).alias("x")
         )
-        .localCheckpoint(eager=False)
     )
     d0 = daily.agg(F.min("day").alias("d0"))
-    ix = daily.crossJoin(F.broadcast(d0)).select(
+    ix = materialize(daily.crossJoin(F.broadcast(d0)).select(
         "x", F.datediff(F.col("day"), F.col("d0")).cast("long").alias("idx")
-    ).localCheckpoint(eager=False)
+    ))
     g = ix.agg(F.count(F.lit(1)).cast("long").alias("n_days")).select(
         "n_days",
         (F.col("n_days") * (F.col("n_days") - 1) / 2)
@@ -14355,7 +14330,7 @@ def durbin_watson_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     d38 = "decimal(38,0)"
-    daily = (
+    daily = materialize(
         _t(spark, sf_dir, "events")
         .groupBy(F.to_date("ts").alias("day"))
         .agg(
@@ -14363,12 +14338,11 @@ def durbin_watson_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.floor(F.col("value") * 100 + 0.5).cast("long")
             ).alias("x")
         )
-        .localCheckpoint(eager=False)
     )
     d0 = daily.agg(F.min("day").alias("d0"))
-    ix = daily.crossJoin(F.broadcast(d0)).select(
+    ix = materialize(daily.crossJoin(F.broadcast(d0)).select(
         "x", F.datediff(F.col("day"), F.col("d0")).cast("long").alias("t")
-    ).localCheckpoint(eager=False)
+    ))
     m = ix.agg(
         F.count(F.lit(1)).cast(d38).alias("n"),
         F.sum(F.col("t").cast(d38)).cast(d38).alias("st"),
@@ -14645,12 +14619,12 @@ def embedding_sim_histogram_intra_label(
             ),
         ).alias("qv"),
     )
-    n = q.select(
+    n = materialize(q.select(
         "vec_id", "label", "qv",
         F.aggregate(
             "qv", F.lit(0).cast("long"), lambda acc, v: acc + v * v
         ).alias("n2"),
-    ).localCheckpoint(eager=False)
+    ))
     a = n.select(
         F.col("label"), F.col("vec_id").alias("ia"),
         F.col("qv").alias("qa"), F.col("n2").alias("na"),
@@ -14892,7 +14866,7 @@ def kendall_tau_revenue_volume(
     pair join (quadratic in the DATE DOMAIN only — the Mann-Kendall /
     theil-sen probe regime; SCALE.md `mann_kendall_shape` row) with
     the small side broadcast. The verdict aggregation is map-side."""
-    daily = (
+    daily = materialize(
         _t(spark, sf_dir, "events")
         .groupBy(F.to_date("ts").alias("day"))
         .agg(
@@ -14901,7 +14875,6 @@ def kendall_tau_revenue_volume(
             ).alias("x"),
             F.count(F.lit(1)).alias("y"),
         )
-        .localCheckpoint(eager=False)
     )
     a = daily.select(
         F.col("day").alias("da"), F.col("x").alias("xa"),
@@ -15540,7 +15513,7 @@ def unit_value_index_monthly_brand(
     d38 = "decimal(38,0)"
     li = _t(spark, sf_dir, "lineitem")
     pt = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    m = (
+    m = materialize(
         li.join(F.broadcast(pt), li.l_partkey == pt.p_partkey)
         .groupBy(
             F.col("p_brand").alias("brand"),
@@ -15554,7 +15527,6 @@ def unit_value_index_monthly_brand(
             ).alias("rev"),
             F.sum(F.col("l_quantity").cast("long")).alias("qty"),
         )
-        .localCheckpoint(eager=False)
     )
     base = m.groupBy("brand").agg(
         F.min_by("rev", "month").alias("rev0"),
@@ -15983,7 +15955,7 @@ def forecast_mase_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one fact aggregation to |days|, two calendar-key
     equi-joins on the tiny daily frame."""
-    daily = (
+    daily = materialize(
         _t(spark, sf_dir, "orders")
         .groupBy(F.to_date("o_orderdate").alias("day"))
         .agg(
@@ -15991,7 +15963,6 @@ def forecast_mase_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long")
             ).alias("x")
         )
-        .localCheckpoint(eager=False)
     )
     d38 = "decimal(38,0)"
 
@@ -16399,7 +16370,7 @@ def anonymization_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: three aggregations over the dimension table (or ONE
     grouping-sets pass — kept as three explicit rollups so each
     level's plan is independently visible); output is 3 rows."""
-    c = (
+    c = materialize(
         _t(spark, sf_dir, "customer")
         .join(
             F.broadcast(
@@ -16416,7 +16387,6 @@ def anonymization_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "bal_band"
             ),
         )
-        .localCheckpoint(eager=False)
     )
 
     def level(i: int, cols: list[str]) -> DataFrame:
@@ -16992,7 +16962,7 @@ def rand_index_kmeans_labels(
     + one contingency aggregation (k·|labels| rows) — counts close
     the pair space in O(cells)."""
     d38 = "decimal(38,0)"
-    q = _emb(spark, sf_dir).select(
+    q = materialize(_emb(spark, sf_dir).select(
         "vec_id", "label",
         F.transform(
             "embedding",
@@ -17000,7 +16970,7 @@ def rand_index_kmeans_labels(
                 "long"
             ),
         ).alias("qv"),
-    ).localCheckpoint(eager=False)
+    ))
     cent = (
         q.orderBy("vec_id")
         .limit(_KM_K)
@@ -17019,9 +16989,9 @@ def rand_index_kmeans_labels(
         .agg(F.min(F.struct("dist", "cid")).alias("m"))
         .select("vec_id", "label", F.col("m.cid").alias("cid"))
     )
-    ct = a.groupBy("cid", "label").agg(
+    ct = materialize(a.groupBy("cid", "label").agg(
         F.count(F.lit(1)).cast(d38).alias("nij")
-    ).localCheckpoint(eager=False)
+    ))
     c2 = lambda c: (c * (c - 1) / 2).cast(d38)  # noqa: E731
     m = ct.agg(
         F.sum("nij").cast(d38).alias("n"),
@@ -17489,7 +17459,7 @@ def wilcoxon_signed_rank_yoy(
     by the calendar — the documented skyline exemption class)."""
     from pyspark.sql import Window
 
-    mr = (
+    mr = materialize(
         _t(spark, sf_dir, "orders")
         .withColumn("yr", F.year(F.to_date("o_orderdate")))
         .filter(F.col("yr").isin(1994, 1995))
@@ -17502,7 +17472,6 @@ def wilcoxon_signed_rank_yoy(
                 F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long")
             ).alias("cents")
         )
-        .localCheckpoint(eager=False)
     )
     a = mr.filter(F.col("yr") == 1994).select(
         "mo", F.col("cents").alias("ca")
@@ -17592,7 +17561,7 @@ def friedman_test_daily_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallel); rollups are |types|- and 1-row."""
     from pyspark.sql import Window
 
-    dt = (
+    dt = materialize(
         _t(spark, sf_dir, "events")
         .filter(
             F.col("event_type").isNotNull() & F.col("value").isNotNull()
@@ -17606,7 +17575,6 @@ def friedman_test_daily_type(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.floor(F.col("value") * 100 + 0.5).cast("long")
             ).alias("cents")
         )
-        .localCheckpoint(eager=False)
     )
     fd = dt.groupBy("day").agg(F.count(F.lit(1)).alias("nt")).filter(
         F.col("nt") == 5
@@ -17855,12 +17823,12 @@ def value_at_risk_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dm = b.groupBy("bp").agg(F.count(F.lit(1)).cast("long").alias("c"))
     wspec = Window.orderBy("bp").rowsBetween(Window.unboundedPreceding, -1)
-    w = dm.select(
+    w = materialize(dm.select(
         "bp", "c",
         F.coalesce(F.sum("c").over(wspec), F.lit(0).cast("long")).alias(
             "cumb"
         ),
-    ).localCheckpoint(eager=False)
+    ))
     kk = dm.agg(
         F.sum("c").cast("long").alias("n"),
         F.expr("CAST((5*SUM(c) + 99) DIV 100 AS BIGINT)").alias("k"),

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -34,3 +35,28 @@ def sf_dir() -> str:
 @pytest.fixture(scope="session")
 def spark_global(spark):
     return spark
+
+
+@pytest.fixture
+def durable_checkpoints(spark, tmp_path):
+    """Context-manager factory: inside ``with durable_checkpoints() as d``
+    the shared session has checkpoint dir ``d``, so every
+    ``materialize`` takes the durable path; on exit the dir is unset
+    again. PySpark has no public unset, hence the JVM setter. A dir left
+    set would silently switch every later test to reliable checkpoints."""
+    sc = spark.sparkContext
+    assert sc.getCheckpointDir() is None, "an earlier test left a dir set"
+
+    @contextmanager
+    def durable():
+        ckpt = str(tmp_path / "ckpt")
+        sc.setCheckpointDir(ckpt)
+        try:
+            yield ckpt
+        finally:
+            getattr(sc._jsc.sc(), "checkpointDir_$eq")(
+                sc._jvm.scala.Option.empty()
+            )
+
+    yield durable
+    assert sc.getCheckpointDir() is None

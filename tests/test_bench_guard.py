@@ -215,3 +215,26 @@ def test_exempt_keys_satisfy_the_written_rule(spark, sf_dir):
         if any(s in plan for s in data_exchanges):
             offenders.append(name)
     assert not offenders, offenders
+
+
+def test_malformed_spark_graft_cpus_falls_back_to_host_cores(monkeypatch):
+    """SPARK_GRAFT_CPUS is parsed in one place: a value that is not a
+    positive integer means one thread per host core, never a crash."""
+    import os
+
+    from metadata_driven_etl_spark import session
+
+    masters = []
+    monkeypatch.setattr(
+        session, "get_spark", lambda master, **kw: masters.append(master)
+    )
+    host = f"local[{os.cpu_count()}]"
+    for bad in ("", "four", "4.5", "0", "-2"):
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", bad)
+        session.get_local_spark()
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    session.get_local_spark()
+    session.get_local_spark(cpus=2)
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    session.get_local_spark()
+    assert masters == [host] * 5 + ["local[3]", "local[2]", host]

@@ -267,28 +267,79 @@ def test_connected_components_fixpoint(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 6: 5, 7: 7, 8: 8}
 
 
-def test_connected_components_durable_checkpoint(spark, tmp_path):
-    """checkpoint_dir switches lineage truncation to reliable checkpoint()
-    (survives executor loss on a real cluster); results must be identical
-    to the localCheckpoint default, and checkpoint files must land in the
-    given directory."""
+def _files_under(path: str) -> list:
+    import pathlib
+
+    return [p for p in pathlib.Path(path).rglob("*") if p.is_file()]
+
+
+def _jobs_started_by(spark, fn) -> int:
+    """Number of Spark jobs ``fn()`` starts (counted by job group)."""
+    import uuid
+
+    sc = spark.sparkContext
+    gid = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, gid)
+    try:
+        fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    return len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def test_materialize_policy_follows_session_checkpoint_dir(
+    spark, durable_checkpoints
+):
+    """One policy, no per-call knob: with no session checkpoint dir,
+    ``materialize`` is a localCheckpoint (lazy starts no job, eager
+    exactly one); once the session has a dir, an operator called with no
+    argument writes reliable-checkpoint files there and leaks no
+    persisted RDD."""
+    from metadata_driven_etl_spark.materialize import materialize
+    from metadata_driven_etl_spark.operators.dedup import connected_components
+
+    df = spark.range(100).selectExpr("id", "id * 2 AS v")
+    assert _jobs_started_by(spark, lambda: materialize(df)) == 0
+    assert _jobs_started_by(spark, lambda: materialize(df, eager=True)) == 1
+
+    nodes = spark.createDataFrame([(i,) for i in range(1, 9)], "doc_id long")
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (5, 6)], "id_a long, id_b long"
+    )
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persisted().keys())
+    with durable_checkpoints() as ckpt:
+        got = {
+            r.doc_id: r.cluster_id
+            for r in connected_components(nodes, pairs).collect()
+        }
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 6: 5, 7: 7, 8: 8}
+    assert _files_under(ckpt), "no reliable checkpoint files written"
+    assert not set(persisted().keys()) - before, "persisted RDD leaked"
+
+
+def test_connected_components_durable_checkpoint(spark, durable_checkpoints):
+    """With a session checkpoint dir, lineage truncation uses reliable
+    checkpoint() (survives executor loss on a real cluster); results
+    must be identical to the localCheckpoint default."""
     from metadata_driven_etl_spark.operators.dedup import connected_components
 
     nodes = spark.createDataFrame([(i,) for i in range(1, 9)], "doc_id long")
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (5, 6)], "id_a long, id_b long"
     )
-    ckpt = str(tmp_path / "cc_ckpt")
-    got = {
+    local = {
         r.doc_id: r.cluster_id
-        for r in connected_components(
-            nodes, pairs, checkpoint_dir=ckpt
-        ).collect()
+        for r in connected_components(nodes, pairs).collect()
     }
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 6: 5, 7: 7, 8: 8}
-    import pathlib
-
-    assert any(pathlib.Path(ckpt).rglob("*")), "no checkpoint files written"
+    with durable_checkpoints() as ckpt:
+        durable = {
+            r.doc_id: r.cluster_id
+            for r in connected_components(nodes, pairs).collect()
+        }
+    assert local == durable == {1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 6: 5, 7: 7, 8: 8}
+    assert _files_under(ckpt), "no checkpoint files written"
 
 
 def test_approx_percentile_within_tolerance(spark, sf_dir):
@@ -512,11 +563,10 @@ def test_lsh_bucket_cap_subset_and_default_parity(spark, sf_dir):
 
 
 @pytest.mark.slow
-def test_lsh_pairs_durable_checkpoint_seam(spark, sf_dir, tmp_path):
-    """The bands/shingle-set materializations accept the same durable
-    checkpoint_dir seam as connected_components: results must be
-    identical to the localCheckpoint default (and checkpoint files land
-    on disk when this session had no checkpoint dir yet)."""
+def test_lsh_pairs_durable_checkpoint_seam(spark, sf_dir, durable_checkpoints):
+    """The bands/shingle-set materializations take the durable path when
+    the session has a checkpoint dir: results must be identical to the
+    localCheckpoint default, and checkpoint files land on disk."""
     from metadata_driven_etl_spark.catalog import load_table
     from metadata_driven_etl_spark.operators.dedup import (
         lsh_candidate_pairs,
@@ -524,27 +574,14 @@ def test_lsh_pairs_durable_checkpoint_seam(spark, sf_dir, tmp_path):
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    ckpt = str(tmp_path / "lsh_ckpt")
-    had_dir = spark.sparkContext.getCheckpointDir()
-
     base = {tuple(r) for r in lsh_candidate_pairs(docs).collect()}
-    durable = {
-        tuple(r)
-        for r in lsh_candidate_pairs(docs, checkpoint_dir=ckpt).collect()
-    }
-    assert base == durable and base
-
     jac_base = {tuple(r) for r in ngram_jaccard_pairs(docs).collect()}
-    jac_durable = {
-        tuple(r)
-        for r in ngram_jaccard_pairs(docs, checkpoint_dir=ckpt).collect()
-    }
+    with durable_checkpoints() as ckpt:
+        durable = {tuple(r) for r in lsh_candidate_pairs(docs).collect()}
+        jac_durable = {tuple(r) for r in ngram_jaccard_pairs(docs).collect()}
+    assert base == durable and base
     assert jac_base == jac_durable
-
-    if not had_dir:
-        import pathlib
-
-        assert any(pathlib.Path(ckpt).rglob("*")), "no checkpoint files"
+    assert _files_under(ckpt), "no checkpoint files"
 
 
 # --- funnel_steps ------------------------------------------------------------
@@ -952,27 +989,27 @@ def test_salted_join_rejects_outer_how(spark):
     assert {r.k for r in salted_join(a, b, on=["k"], how="left_anti").collect()} == {3}
 
 
-def test_materialize_durable_path_does_not_leak_cache(spark, tmp_path):
+def test_materialize_durable_path_does_not_leak_cache(
+    spark, durable_checkpoints
+):
     """persist()→checkpoint(eager)→unpersist: after a durable
     materialization no CacheManager entry may linger (one leaked per
     convergence block inside connected_components otherwise)."""
-    from metadata_driven_etl_spark.operators.dedup import _materialize
+    from metadata_driven_etl_spark.materialize import materialize
 
     jsc = spark.sparkContext._jsc.sc()
     before = jsc.getPersistentRDDs().size()
-    out = _materialize(
-        spark.range(1000).selectExpr("id", "id * 2 AS v"),
-        str(tmp_path / "ckpt"),
-    )
+    with durable_checkpoints():
+        out = materialize(spark.range(1000).selectExpr("id", "id * 2 AS v"))
     assert out.count() == 1000  # durable checkpoint materialized eagerly
     assert jsc.getPersistentRDDs().size() == before
 
 
-def test_blocked_levenshtein_durable_checkpoint_seam(spark, tmp_path):
-    """checkpoint_dir must thread through to a reliable checkpoint (same
-    seam as the dedup pair generators) and leave results unchanged."""
-    import os
-
+def test_blocked_levenshtein_durable_checkpoint_seam(
+    spark, durable_checkpoints
+):
+    """With a session checkpoint dir the projected side goes through a
+    reliable checkpoint, and results are unchanged."""
     from metadata_driven_etl_spark.operators.joins import (
         blocked_levenshtein_pairs,
     )
@@ -981,18 +1018,12 @@ def test_blocked_levenshtein_durable_checkpoint_seam(spark, tmp_path):
         [(1, "alpha", "b1"), (2, "alphb", "b1"), (3, "zzzzz", "b1")],
         "id long, name string, blk string",
     )
-    out = blocked_levenshtein_pairs(
-        df, "id", "name", "blk", max_dist=2,
-        checkpoint_dir=str(tmp_path / "lev_ckpt"),
-    ).collect()
+    with durable_checkpoints() as ckpt:
+        out = blocked_levenshtein_pairs(
+            df, "id", "name", "blk", max_dist=2
+        ).collect()
     assert {(r.id_a, r.id_b, r.edit_dist) for r in out} == {(1, 2, 1)}
-    # The seam sets the context dir only if unset (shared test session may
-    # have set it already) — assert files landed under the ACTIVE dir.
-    active = spark.sparkContext.getCheckpointDir()
-    assert active, "no checkpoint dir active after durable materialization"
-    assert any(
-        files for _, _, files in os.walk(active.removeprefix("file:"))
-    ), "no reliable checkpoint files written"
+    assert _files_under(ckpt), "no reliable checkpoint files written"
 
 
 # ---------------------------------------------------------------------------
@@ -1845,40 +1876,30 @@ def test_distributed_running_sum_null_skipping(spark_global):
         assert got[k] == want[k], k
 
 
-def test_distributed_ntile_durable_checkpoint_seam(spark_global, tmp_path):
-    """VERDICT r8 item 5: the durable `checkpoint_dir=` seam must produce
-    the same buckets as the localCheckpoint default (and actually write
-    reliable-checkpoint files, so executor loss can't kill a 100 TB run
-    mid-plan)."""
+def test_distributed_ntile_durable_checkpoint_seam(
+    spark_global, durable_checkpoints
+):
+    """VERDICT r8 item 5: with a session checkpoint dir, distributed_ntile
+    must produce the same buckets as the localCheckpoint default (and
+    actually write reliable-checkpoint files, so executor loss can't kill
+    a 100 TB run mid-plan)."""
     from pyspark.sql import functions as F
 
     from metadata_driven_etl_spark.operators.windows import (
         distributed_ntile,
     )
 
-    ckpt = str(tmp_path / "ntile_ckpt")
     df = spark_global.range(53).select((F.col("id") * 31 % 17).alias("v"), "id")
     order = [F.col("v").asc(), F.col("id").asc()]
     local = {
         r.id: r.b for r in distributed_ntile(df, 5, order, "b").collect()
     }
-    durable = {
-        r.id: r.b
-        for r in distributed_ntile(
-            df, 5, order, "b", checkpoint_dir=ckpt
-        ).collect()
-    }
+    with durable_checkpoints() as ckpt:
+        durable = {
+            r.id: r.b for r in distributed_ntile(df, 5, order, "b").collect()
+        }
     assert durable == local
-    import os
-
-    ckpt_dir = spark_global.sparkContext.getCheckpointDir()
-    ckpt_dir = ckpt_dir.removeprefix("file:")
-    written = [
-        os.path.join(root, f)
-        for root, _, files in os.walk(ckpt_dir)
-        for f in files
-    ]
-    assert written, "durable seam must write reliable-checkpoint files"
+    assert _files_under(ckpt), "durable seam must write reliable-checkpoint files"
 
 
 def test_distributed_ntile_rejects_colliding_columns(spark_global):
